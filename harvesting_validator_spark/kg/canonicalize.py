@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from harvesting_validator_spark.runtime import persistent_rdd_ids, unpersist_rdds
+from harvesting_validator_spark.runtime import checkpoint, unpersist_rdds
 
 
 def _sort_key(col):
@@ -66,7 +66,6 @@ def connected_components(
         _sort_key(F.col("src")).alias("src"), _sort_key(F.col("dst")).alias("dst")
     )
     spark = edges.sparkSession
-    pre_ids = persistent_rdd_ids(spark)
     # r6: symmetrize via ONE explode instead of a union of two selects —
     # Catalyst does no common-subexpression elimination across union
     # branches, so the union recomputed the edge source (typically the
@@ -77,15 +76,12 @@ def connected_components(
         F.struct(F.col("src").alias("a"), F.col("dst").alias("b")),
         F.struct(F.col("dst").alias("a"), F.col("src").alias("b")),
     )
-    und0 = (
-        edges.select(F.explode(both).alias("e"))
-        .select("e.a", "e.b")
-        .distinct()
-        # materialize ONCE: every iteration joins against the edge list,
-        # which usually sits on an expensive upstream (LSH blocking +
-        # Arrow pair scoring) — without this, each round re-executed that
-        # whole pipeline (measured 57s -> ~3s for the 5k-doc bench corpus)
-        .localCheckpoint()
+    # materialize ONCE: every iteration joins against the edge list,
+    # which usually sits on an expensive upstream (LSH blocking + Arrow
+    # pair scoring) — without this, each round re-executed that whole
+    # pipeline (measured 57s -> ~3s for the 5k-doc bench corpus)
+    und0, und0_ids = checkpoint(
+        edges.select(F.explode(both).alias("e")).select("e.a", "e.b").distinct()
     )
     # iterative rounds work on small (node,label) tables whose size is
     # known after the checkpoint: size the loop's shuffle partitions to
@@ -114,22 +110,18 @@ def connected_components(
         .persist()
     )
     und.count()  # materialize the cache with the layout above
-    und_ids = persistent_rdd_ids(spark) - pre_ids
     try:
-        # label(n) starts as min(n, min(neighbors))
-        labels = (
+        # label(n) starts as min(n, min(neighbors)). label_ids back it
+        # until a later probed round's checkpoint supersedes and frees
+        # it: loop storage stays O(1) label tables, not O(rounds)
+        labels, label_ids = checkpoint(
             und.groupBy("a")
             .agg(F.min("b").alias("nb_min"))
             .select(
                 F.col("a").alias("node"),
                 F.least(F.col("a"), F.col("nb_min")).alias("label"),
-            )
-        ).localCheckpoint()
-        # ids of the checkpoint currently backing `labels`: once a later
-        # probed round eager-checkpoints its successor, this one is
-        # unreachable from any live plan and is released immediately —
-        # peak loop storage stays O(1) label tables instead of O(rounds)
-        label_ids = persistent_rdd_ids(spark) - pre_ids - und_ids
+            ),
+        )
 
         for it in range(max_iterations):
             # propagate: candidate label for n = min over neighbor labels
@@ -184,11 +176,8 @@ def connected_components(
                 # eager checkpoint materializes the fused rounds; the probe
                 # then reads cached rows. chg reflects only the LAST
                 # round's movement, which is exactly the fixpoint test.
-                new_labels = new_labels.localCheckpoint()
+                new_labels, new_ids = checkpoint(new_labels)
                 # the previous label checkpoint is now superseded
-                new_ids = (
-                    persistent_rdd_ids(spark) - pre_ids - und_ids - label_ids
-                )
                 unpersist_rdds(spark, label_ids)
                 label_ids = new_ids
             labels = new_labels.drop("chg")
@@ -198,7 +187,8 @@ def connected_components(
         spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
         # the returned labels are always backed by an eager (materialized)
         # checkpoint — the edge list is no longer reachable from any plan
-        unpersist_rdds(spark, und_ids)
+        und.unpersist()
+        unpersist_rdds(spark, und0_ids)
     return labels.select(
         _strip_key(F.col("node")).alias("entity"),
         _strip_key(F.col("label")).alias("canonical"),

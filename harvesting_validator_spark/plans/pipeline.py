@@ -21,6 +21,7 @@ from harvesting_validator_spark.operators.filtering import (
     report_triples,
     split_valid_error,
 )
+from harvesting_validator_spark.runtime import checkpoint, release_new_rdds
 from harvesting_validator_spark.runtime import persistent_rdd_ids, unpersist_rdds
 from harvesting_validator_spark.shacl.compile import compute_focus, validate
 from harvesting_validator_spark.shacl.parse import parse_shapes_turtle
@@ -95,11 +96,11 @@ class KgRun:
     _spark: SparkSession = None  # type: ignore[assignment]
 
     def cleanup(self) -> None:
-        """Unpersist this run's caches (including the validation stage's)
-        AND the union-find loop's final localCheckpoint — checkpoint RDDs
-        have no DataFrame-level unpersist, so they are tracked by id
-        (runtime.py). After cleanup, this run's DataFrames must not be
-        re-evaluated: a released checkpoint cannot be recomputed."""
+        """Unpersist this run's caches (``triples``, the validation
+        stage's) AND its checkpoint-backed outputs, ``mentions`` and
+        ``mapping``, tracked by RDD id. After cleanup, this run's
+        DataFrames must not be re-evaluated: a released checkpoint cannot
+        be recomputed."""
         for df in self._persisted or []:
             df.unpersist()
         if self._spark is not None and self._checkpoint_ids:
@@ -137,38 +138,30 @@ def run_kg_construction(
     from harvesting_validator_spark.kg.normalize import normalize_triples
 
     validation = run_validation(spark, sources, shapes_turtle)
-    persisted: list = []
     conforming = validation.verdicts.filter(F.col("conforms")).select("doc_id")
     triples = normalize_triples(
         validation.valid_triples.join(conforming, "doc_id", "left_semi")
     ).persist()
-    persisted.append(triples)
 
-    # r6: mentions feed three consumers (the blocking chain, the
-    # canonical-mapping's all-entities side, and the run's own export);
-    # without a persist each consumer re-runs the two-scan pivot over
-    # triples (profiled ~1.6s per recompute at sf1.0). The full-width
-    # count honors the house persist invariant — every in-pipeline
-    # consumer is column-pruned, and a pruned first scan does not
-    # reliably serve later full-width readers (run.mentions export).
-    mentions = extract_mentions(triples).persist()
-    persisted.append(mentions)
-    mentions.count()
+    # mentions feed the blocking chain, the mapping's entity side and the
+    # export. Eager checkpoint, not persist(): a cache re-renders its whole
+    # cached plan (nested triples/validation caches) at every execution
+    # start and AQE re-plan, 6.2M chars vs 584 here; every consumer
+    # shuffles anyway. Not executor-loss tolerant: fine for local[N].
+    mentions, mention_ids = checkpoint(extract_mentions(triples))
     if blocking == "key":
         candidates = block_candidates_by_key(mentions)
     else:
         candidates = block_candidates(mentions, n_salt=n_salt)
     edges = link_edges(candidates, threshold=link_threshold)
-    # the union-find loop leaves ONE eager localCheckpoint resident (its
-    # final label table); snapshot around the call so cleanup() can
-    # release it — the in-loop intermediates are already released by
-    # connected_components itself
-    pre_cp = persistent_rdd_ids(spark)
-    mapping = canonical_mapping(
-        mentions.select("entity"), edges
-    ).persist()
-    checkpoint_ids = persistent_rdd_ids(spark) - pre_cp
-    persisted.append(mapping)
+    # same for the mapping (its rewrite joins shuffle or broadcast either
+    # way). Its eager checkpoint cuts the lineage to the union-find's
+    # final label checkpoint, which the loop leaves resident: free it now
+    pre_map = persistent_rdd_ids(spark)
+    mapping, mapping_ids = checkpoint(
+        canonical_mapping(mentions.select("entity"), edges)
+    )
+    release_new_rdds(spark, pre_map | mapping_ids)
     graph = dedup_graph(rewrite_to_canonical(triples, mapping))
     return KgRun(
         validation=validation,
@@ -177,8 +170,8 @@ def run_kg_construction(
         edges=edges,
         mapping=mapping,
         graph=graph,
-        _persisted=persisted,
-        _checkpoint_ids=checkpoint_ids,
+        _persisted=[triples],
+        _checkpoint_ids=mention_ids | mapping_ids,
         _spark=spark,
     )
 

@@ -718,7 +718,14 @@ def _rec_triples(spark, sf_dir):
     same single doc_id exchange); only the untouched validation branch
     disappears. ``kg_recursive_verdicts`` still builds the full run via
     ``_rec_run``; when that run is already cached its triples are
-    reused here instead of re-parsing."""
+    reused here instead of re-parsing.
+
+    Lifetime: once ``_rec_run`` builds the full run it releases this
+    parse cache, so a frame returned from here earlier (e.g. a
+    ``sparql_reachable_rollup`` result) re-runs the whole parse if
+    evaluated again. Slower, never wrong (a ``persist()`` cache, not a
+    checkpoint), and fine under the one-query-at-a-time driver
+    contract."""
     full = _RUN_CACHE.get((id(spark), sf_dir, "recpath"))
     if full is not None:
         return full.triples

@@ -21,7 +21,7 @@ Connect), so callers never need to guard.
 
 from __future__ import annotations
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def persistent_rdd_ids(spark: SparkSession) -> set[int]:
@@ -59,6 +59,18 @@ def release_new_rdds(
     after a query's output is fully materialized (counted/collected) —
     at that point no plan will re-read the checkpoints."""
     return unpersist_rdds(spark, persistent_rdd_ids(spark) - before, blocking)
+
+
+def checkpoint(df: DataFrame) -> tuple[DataFrame, set[int]]:
+    """Eager ``localCheckpoint`` of ``df``: the result, one ``Scan
+    ExistingRDD`` leaf without the producer's plan text or partitioning,
+    and its own RDD id for the owner to release with ``unpersist_rdds``
+    (not the ids of upstream caches its job happens to fill)."""
+    df = df.localCheckpoint()
+    try:
+        return df, {int(df._jdf.queryExecution().analyzed().rdd().id())}
+    except Exception:
+        return df, set()
 
 
 # --- bucketed scratch tables ---------------------------------------------------

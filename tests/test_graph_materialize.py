@@ -17,17 +17,22 @@ def test_materialize_roundtrip(spark, tmp_path):
     run = run_kg_construction(
         spark, generate_entity_sources(spark, 30, n_entities=3), ENTITY_PROFILE
     )
-    out = str(tmp_path / "graph")
-    materialize_graph(run.graph, out, partition_buckets=8)
+    try:
+        out = str(tmp_path / "graph")
+        materialize_graph(run.graph, out, partition_buckets=8)
 
-    back = spark.read.parquet(out)
-    # partition column present and within range
-    buckets = {r.pred_bucket for r in back.select("pred_bucket").distinct().collect()}
-    assert buckets <= set(range(8))
-    # content identical to the in-memory graph
-    cols = ["subj", "pred", "obj_value", "obj_kind", "obj_datatype", "obj_lang"]
-    assert {tuple(r) for r in back.select(*cols).collect()} == {
-        tuple(r) for r in run.graph.select(*cols).collect()
-    }
-    # dedup is idempotent
-    assert dedup_graph(back.select(*cols)).count() == run.graph.count()
+        back = spark.read.parquet(out)
+        # partition column present and within range
+        buckets = {
+            r.pred_bucket for r in back.select("pred_bucket").distinct().collect()
+        }
+        assert buckets <= set(range(8))
+        # content identical to the in-memory graph
+        cols = ["subj", "pred", "obj_value", "obj_kind", "obj_datatype", "obj_lang"]
+        assert {tuple(r) for r in back.select(*cols).collect()} == {
+            tuple(r) for r in run.graph.select(*cols).collect()
+        }
+        # dedup is idempotent
+        assert dedup_graph(back.select(*cols)).count() == run.graph.count()
+    finally:
+        run.cleanup()

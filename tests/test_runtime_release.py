@@ -10,9 +10,13 @@ tests cover the checkpoint RDDs that have no DataFrame-level unpersist).
 
 from __future__ import annotations
 
+import pytest
+
 from harvesting_validator_spark.runtime import (
+    checkpoint,
     persistent_rdd_ids,
     release_new_rdds,
+    unpersist_rdds,
 )
 
 
@@ -20,7 +24,58 @@ def _storage_ids(spark):
     return persistent_rdd_ids(spark)
 
 
-def test_connected_components_releases_loop_intermediates(spark):
+@pytest.fixture
+def sentinels(spark):
+    """Ids of a persisted frame and a checkpoint that this test holds,
+    pinned before it takes its storage baseline. Checkpoints that earlier
+    tests left unreferenced are dropped by the JVM's ContextCleaner at
+    any GC, so storage may fall below a baseline on its own and equality
+    would flake; "back to baseline" is a subset test instead, and these
+    held ids must survive it, so a sweep or cleanup that releases ids it
+    does not own still fails."""
+    before = _storage_ids(spark)
+    cached = spark.range(3).persist()
+    cached.count()
+    # held stays referenced until teardown, out of the ContextCleaner's reach
+    held, _ = checkpoint(spark.range(3))
+    ids = _storage_ids(spark) - before
+    assert len(ids) == 2
+    yield ids
+    cached.unpersist(blocking=True)
+    unpersist_rdds(spark, ids, blocking=True)
+
+
+def _assert_at_baseline(spark, base, sentinels):
+    now = _storage_ids(spark)
+    assert now <= base, f"left resident: {now - base}"
+    assert sentinels <= now, f"released ids it does not own: {sentinels - now}"
+
+
+def _checkpoint_rdd_id(df) -> int:
+    """Id of the RDD behind a checkpoint-backed frame (its LogicalRDD)."""
+    return int(df._jdf.queryExecution().analyzed().rdd().id())
+
+
+def test_checkpoint_returns_the_ids_it_pinned(spark, sentinels):
+    """runtime.checkpoint reports exactly its own RDD: not a lazily
+    persisted upstream cache that its job fills, which stays its owner's
+    to release. The frame stays readable from the checkpoint alone."""
+    base = _storage_ids(spark)
+    df, ids = checkpoint(spark.range(10).selectExpr("id * 2 AS id"))
+    assert ids == {_checkpoint_rdd_id(df)}
+    assert sorted(r.id for r in df.collect()) == list(range(0, 20, 2))
+
+    upstream = spark.range(5).persist()
+    df2, ids2 = checkpoint(upstream.selectExpr("id + 1 AS id"))
+    assert ids2 == {_checkpoint_rdd_id(df2)}
+    assert len(_storage_ids(spark) - base - ids - ids2) == 1  # the upstream cache
+    upstream.unpersist(blocking=True)
+    assert sorted(r.id for r in df2.collect()) == [1, 2, 3, 4, 5]
+    assert unpersist_rdds(spark, ids | ids2, blocking=True) == 2
+    _assert_at_baseline(spark, base, sentinels)
+
+
+def test_connected_components_releases_loop_intermediates(spark, sentinels):
     """A 17-node chain needs several pointer-jumping rounds; the in-loop
     release must leave at most ONE resident checkpoint (the final label
     table the returned DataFrame is backed by) — not one per probed
@@ -42,12 +97,14 @@ def test_connected_components_releases_loop_intermediates(spark):
     assert len(resident) <= 1, f"loop leaked {len(resident)} RDDs"
     released = release_new_rdds(spark, base, blocking=True)
     assert released == len(resident)
-    assert _storage_ids(spark) == base
+    _assert_at_baseline(spark, base, sentinels)
 
 
-def test_kg_run_cleanup_returns_storage_to_baseline(spark):
-    """KgRun.cleanup() must release persist() caches AND the union-find
-    final checkpoint (tracked by RDD id)."""
+def test_kg_run_cleanup_returns_storage_to_baseline(spark, sentinels):
+    """KgRun.cleanup() must release persist() caches AND its checkpoints,
+    tracked by RDD id: exactly the mentions and mapping checkpoints (the
+    union-find's final label checkpoint is freed once mapping holds its
+    rows)."""
     from harvesting_validator_spark.plans.pipeline import run_kg_construction
     from harvesting_validator_spark.sources.synthetic import (
         APPLICATION_PROFILE,
@@ -60,14 +117,17 @@ def test_kg_run_cleanup_returns_storage_to_baseline(spark):
     )
     assert run.graph.count() > 0
     assert _storage_ids(spark) - base, "expected resident caches before cleanup"
+    checkpoints = {_checkpoint_rdd_id(run.mentions), _checkpoint_rdd_id(run.mapping)}
+    assert run._checkpoint_ids == checkpoints
+    assert checkpoints <= _storage_ids(spark)
     run.cleanup()
-    # non-blocking unpersist: re-read for the assertion with a blocking
-    # sweep of anything the async release has not finished dropping yet
-    release_new_rdds(spark, base, blocking=True)
-    assert _storage_ids(spark) == base
+    # unpersisting drops an id from the persistent-RDD map at once, even
+    # non-blocking, so cleanup() alone must get back to the baseline
+    assert not checkpoints & _storage_ids(spark), "cleanup() kept a checkpoint"
+    _assert_at_baseline(spark, base, sentinels)
 
 
-def test_bench_style_sweep_after_pagerank(spark, sf_dir):
+def test_bench_style_sweep_after_pagerank(spark, sf_dir, sentinels):
     """r6: the pagerank edge list lives in a layout-preserving persisted
     repartition (no bucketed scratch table, no catalog entry, no /tmp
     dir). One invocation leaves exactly ONE resident cache (the edge
@@ -94,6 +154,6 @@ def test_bench_style_sweep_after_pagerank(spark, sf_dir):
     # a second invocation must hand off the cache, not accumulate
     assert q_pagerank_bipartite(spark, sf_dir).count() > 0
     release_new_rdds(spark, base, blocking=True)
-    assert _storage_ids(spark) == base
+    _assert_at_baseline(spark, base, sentinels)
     assert len(_PR_EDGE_CACHE) == 1  # handle for the (now-released) last run
     _PR_EDGE_CACHE.clear()
