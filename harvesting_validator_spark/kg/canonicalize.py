@@ -23,7 +23,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from harvesting_validator_spark.runtime import checkpoint, unpersist_rdds
+from harvesting_validator_spark.runtime import (
+    checkpoint,
+    loop_width,
+    unpersist_rdds,
+)
 
 
 def _sort_key(col):
@@ -56,12 +60,8 @@ def connected_components(
     (eager checkpoint + probe). Unprobed rounds stay lazy: their joins fuse
     into the next probed round's plan, so 2 rounds cost ONE job.
 
-    Concurrency caveat: the loop temporarily sets the SESSION-global
-    ``spark.sql.shuffle.partitions`` (restored in ``finally``) to size the
-    tiny per-round label shuffles. Safe for the one-job-per-session shape
-    every entrypoint here uses; two queries planned CONCURRENTLY in one
-    session would race on it — give each concurrent caller its own
-    session (``spark.newSession()``) if that shape ever appears."""
+    The loop sizes its label shuffles through ``runtime.loop_width`` (see
+    its concurrency note)."""
     edges = edges.select(
         _sort_key(F.col("src")).alias("src"), _sort_key(F.col("dst")).alias("dst")
     )
@@ -88,107 +88,105 @@ def connected_components(
     # the data instead of the session-wide corpus setting (64 near-empty
     # reduce tasks per join made each tiny round cost like a corpus scan;
     # at web scale `und` is huge and this keeps the session value)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    loop_parts = max(8, min(int(prev_parts), und0.count() // 200_000 + 8))
-    spark.conf.set("spark.sql.shuffle.partitions", str(loop_parts))
-    # the checkpoint re-enters the plan as `Scan ExistingRDD,
-    # UnknownPartitioning` — joined as-is, Catalyst would re-shuffle the
-    # FULL edge list on `b` inside every round (K x |E| shuffled bytes).
-    # A persisted post-repartition cache fixes that: InMemoryTableScan
-    # reports the cached plan's partitioning AND ordering, so the
-    # per-round neighbor join reads the edge side in place, pre-sorted,
-    # and only the O(|V|) label table moves. (A one-time shuffle off the
-    # checkpoint buys K shuffle-free scans; same trick is NOT applicable
-    # to the label chain, which needs lineage truncation each round.)
-    # Measured sf0.1 local[32], 4 interleaved fresh-JVM pairs:
-    # wall-neutral (old min 20.7s / new 21.1s) — blocked entity graphs
-    # converge in ~2 probed rounds here, so the K x |E| term is tiny at
-    # this sf; the change buys the at-scale byte complexity.
-    und = (
-        und0.repartition(loop_parts, "b")
-        .sortWithinPartitions("b")
-        .persist()
-    )
-    und.count()  # materialize the cache with the layout above
-    try:
-        # label(n) starts as min(n, min(neighbors)). label_ids back it
-        # until a later probed round's checkpoint supersedes and frees
-        # it: loop storage stays O(1) label tables, not O(rounds)
-        labels, label_ids = checkpoint(
-            und.groupBy("a")
-            .agg(F.min("b").alias("nb_min"))
-            .select(
-                F.col("a").alias("node"),
-                F.least(F.col("a"), F.col("nb_min")).alias("label"),
-            ),
+    with loop_width(spark, und0.count() // 200_000 + 8) as loop_parts:
+        # the checkpoint re-enters the plan as `Scan ExistingRDD,
+        # UnknownPartitioning` — joined as-is, Catalyst would re-shuffle the
+        # FULL edge list on `b` inside every round (K x |E| shuffled bytes).
+        # A persisted post-repartition cache fixes that: InMemoryTableScan
+        # reports the cached plan's partitioning AND ordering, so the
+        # per-round neighbor join reads the edge side in place, pre-sorted,
+        # and only the O(|V|) label table moves. (A one-time shuffle off the
+        # checkpoint buys K shuffle-free scans; same trick is NOT applicable
+        # to the label chain, which needs lineage truncation each round.)
+        # Measured sf0.1 local[32], 4 interleaved fresh-JVM pairs:
+        # wall-neutral (old min 20.7s / new 21.1s) — blocked entity graphs
+        # converge in ~2 probed rounds here, so the K x |E| term is tiny at
+        # this sf; the change buys the at-scale byte complexity.
+        und = (
+            und0.repartition(loop_parts, "b")
+            .sortWithinPartitions("b")
+            .persist()
         )
-
-        for it in range(max_iterations):
-            # propagate: candidate label for n = min over neighbor labels
-            nb = (
-                und.join(labels, und.b == labels.node)
-                .groupBy("a")
-                .agg(F.min("label").alias("nb_label"))
-            )
-            propagated = (
-                labels.join(nb, labels.node == nb.a, "left")
+        und.count()  # materialize the cache with the layout above
+        try:
+            # label(n) starts as min(n, min(neighbors)). label_ids back it
+            # until a later probed round's checkpoint supersedes and frees
+            # it: loop storage stays O(1) label tables, not O(rounds)
+            labels, label_ids = checkpoint(
+                und.groupBy("a")
+                .agg(F.min("b").alias("nb_min"))
                 .select(
-                    "node",
-                    F.col("label").alias("old_label"),
-                    F.least(
-                        F.col("label"), F.coalesce(F.col("nb_label"), F.col("label"))
-                    ).alias("label"),
+                    F.col("a").alias("node"),
+                    F.least(F.col("a"), F.col("nb_min")).alias("label"),
+                ),
+            )
+
+            for it in range(max_iterations):
+                # propagate: candidate label for n = min over neighbor labels
+                nb = (
+                    und.join(labels, und.b == labels.node)
+                    .groupBy("a")
+                    .agg(F.min("label").alias("nb_label"))
                 )
-            )
-            # pointer jumping: label(n) <- min(label(n), label(label(n))).
-            # Neighbor propagation alone needs O(diameter) rounds (a chain
-            # of length d takes d rounds); the jump halves the pointer
-            # depth each round, giving O(log d) total — the property that
-            # makes union-find viable on web-scale graphs with long
-            # equivalence chains.
-            parents = propagated.select(
-                F.col("node").alias("p_node"), F.col("label").alias("p_label")
-            )
-            new_labels = propagated.join(
-                parents, propagated.label == parents.p_node, "left"
-            ).select(
-                "node",
-                F.least(
-                    F.col("label"), F.coalesce(F.col("p_label"), F.col("label"))
-                ).alias("label"),
-                # fixpoint flag computed IN the checkpointed plan, so the
-                # change probe below reads materialized rows instead of
-                # re-running the round's joins as a second full job
-                (
-                    F.least(
-                        F.col("label"),
-                        F.coalesce(F.col("p_label"), F.col("label")),
+                propagated = (
+                    labels.join(nb, labels.node == nb.a, "left")
+                    .select(
+                        "node",
+                        F.col("label").alias("old_label"),
+                        F.least(
+                            F.col("label"),
+                            F.coalesce(F.col("nb_label"), F.col("label")),
+                        ).alias("label"),
                     )
-                    != F.col("old_label")
-                ).alias("chg"),
-            )
-            # probe at it = 0, k, 2k...: round 0 catches the (common)
-            # graphs already converged by the min-of-neighbors init —
-            # cliques/stars — after ONE round; deep chains amortize the
-            # probes at 1/k per round thereafter
-            probe = it % checkpoint_every == 0 or it == max_iterations - 1
-            if probe:
-                # eager checkpoint materializes the fused rounds; the probe
-                # then reads cached rows. chg reflects only the LAST
-                # round's movement, which is exactly the fixpoint test.
-                new_labels, new_ids = checkpoint(new_labels)
-                # the previous label checkpoint is now superseded
-                unpersist_rdds(spark, label_ids)
-                label_ids = new_ids
-            labels = new_labels.drop("chg")
-            if probe and new_labels.filter(F.col("chg")).limit(1).count() == 0:
-                break
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        # the returned labels are always backed by an eager (materialized)
-        # checkpoint — the edge list is no longer reachable from any plan
-        und.unpersist()
-        unpersist_rdds(spark, und0_ids)
+                )
+                # pointer jumping: label(n) <- min(label(n), label(label(n))).
+                # Neighbor propagation alone needs O(diameter) rounds (a chain
+                # of length d takes d rounds); the jump halves the pointer
+                # depth each round, giving O(log d) total — the property that
+                # makes union-find viable on web-scale graphs with long
+                # equivalence chains.
+                parents = propagated.select(
+                    F.col("node").alias("p_node"), F.col("label").alias("p_label")
+                )
+                new_labels = propagated.join(
+                    parents, propagated.label == parents.p_node, "left"
+                ).select(
+                    "node",
+                    F.least(
+                        F.col("label"), F.coalesce(F.col("p_label"), F.col("label"))
+                    ).alias("label"),
+                    # fixpoint flag computed IN the checkpointed plan, so the
+                    # change probe below reads materialized rows instead of
+                    # re-running the round's joins as a second full job
+                    (
+                        F.least(
+                            F.col("label"),
+                            F.coalesce(F.col("p_label"), F.col("label")),
+                        )
+                        != F.col("old_label")
+                    ).alias("chg"),
+                )
+                # probe at it = 0, k, 2k...: round 0 catches the (common)
+                # graphs already converged by the min-of-neighbors init —
+                # cliques/stars — after ONE round; deep chains amortize the
+                # probes at 1/k per round thereafter
+                probe = it % checkpoint_every == 0 or it == max_iterations - 1
+                if probe:
+                    # eager checkpoint materializes the fused rounds; the probe
+                    # then reads cached rows. chg reflects only the LAST
+                    # round's movement, which is exactly the fixpoint test.
+                    new_labels, new_ids = checkpoint(new_labels)
+                    # the previous label checkpoint is now superseded
+                    unpersist_rdds(spark, label_ids)
+                    label_ids = new_ids
+                labels = new_labels.drop("chg")
+                if probe and new_labels.filter(F.col("chg")).limit(1).count() == 0:
+                    break
+        finally:
+            # the returned labels are always backed by an eager (materialized)
+            # checkpoint — the edge list is no longer reachable from any plan
+            und.unpersist()
+            unpersist_rdds(spark, und0_ids)
     return labels.select(
         _strip_key(F.col("node")).alias("entity"),
         _strip_key(F.col("label")).alias("canonical"),

@@ -14,8 +14,6 @@ here certifies the parser, the constraint compiler, the filter semantics
 
 from __future__ import annotations
 
-from contextlib import contextmanager
-
 from pyspark.sql import functions as F
 
 from harvesting_validator_spark.plans.pipeline import (
@@ -24,6 +22,7 @@ from harvesting_validator_spark.plans.pipeline import (
     run_validation,
 )
 from harvesting_validator_spark.queries.common import tbl
+from harvesting_validator_spark.runtime import loop_width
 from harvesting_validator_spark.sources.synthetic import (
     APPLICATION_PROFILE,
     ENTITY_PROFILE,
@@ -42,24 +41,15 @@ def _corpus_n(spark, sf_dir: str) -> int:
     return tbl(spark, sf_dir, "documents").count()
 
 
-@contextmanager
-def _sized_shuffle(spark, n_docs: int):
-    """Size shuffle width to the corpus while a pipeline BUILDS (the
-    builders materialize their heavy stages eagerly: violations.count(),
-    union-find probes). AQE partition coalescing is deliberately OFF
-    (session.py — byte-sized coalescing collapses this engine's highly
-    compressible IRI shuffles), so small driver-gate corpora otherwise
-    pay ~64 near-empty reduce tasks per exchange across ~10 stages —
-    pure scheduling overhead. Same sizing idea as the union-find loop
-    (kg/canonicalize.py); width never exceeds the session setting, so
-    corpus-scale runs keep their configured parallelism."""
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    small = max(8, min(int(prev), n_docs // 250 + 4))
-    spark.conf.set("spark.sql.shuffle.partitions", str(small))
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+def _build_width(n_docs: int) -> int:
+    """``runtime.loop_width`` target while a pipeline over ``n_docs``
+    BUILDS (the builders materialize their heavy stages eagerly:
+    violations.count(), union-find probes). AQE partition coalescing is
+    deliberately OFF (session.py — byte-sized coalescing collapses this
+    engine's highly compressible IRI shuffles), so small driver-gate
+    corpora otherwise pay ~64 near-empty reduce tasks per exchange across
+    ~10 stages — pure scheduling overhead."""
+    return n_docs // 250 + 4
 
 
 def _run(spark, sf_dir):
@@ -69,7 +59,7 @@ def _run(spark, sf_dir):
     if key not in _RUN_CACHE:
         n = _corpus_n(spark, sf_dir)
         sources = generate_sources(spark, n)
-        with _sized_shuffle(spark, n):
+        with loop_width(spark, _build_width(n)):
             _RUN_CACHE[key] = run_validation(spark, sources, APPLICATION_PROFILE)
     return _RUN_CACHE[key]
 
@@ -293,7 +283,7 @@ def _kg_run(spark, sf_dir):
         # blocking operator itself is exercised (and benched) on the
         # high-entropy documents corpus via minhash_lsh_pairs /
         # lsh_verified_pairs.
-        with _sized_shuffle(spark, n):
+        with loop_width(spark, _build_width(n)):
             _KG_CACHE[key] = run_kg_construction(
                 spark, sources, ENTITY_PROFILE, blocking="key"
             )
@@ -337,7 +327,7 @@ def q_kg_chain_clusters(spark, sf_dir):
 
     n = _corpus_n(spark, sf_dir)
     sources = generate_chain_sources(spark, n, chain_len=_CHAIN_LEN)
-    with _sized_shuffle(spark, n):
+    with loop_width(spark, _build_width(n)):
         triples = normalize_triples(parse_sources_to_triples(sources))
         mentions = extract_mentions(triples)
         edges = link_edges(block_candidates_by_key(mentions), threshold=0.9)
@@ -376,7 +366,7 @@ def q_kg_incremental_clusters(spark, sf_dir):
 
     n = _corpus_n(spark, sf_dir)
     sources = generate_entity_sources(spark, n, n_entities=n // 10)
-    with _sized_shuffle(spark, n):
+    with loop_width(spark, _build_width(n)):
         triples = normalize_triples(parse_sources_to_triples(sources))
         mentions = extract_mentions(triples)
         # doc i <-> entity E%06d(i): last-digit parity splits the batches
@@ -458,7 +448,7 @@ def q_kg_linking_quality(spark, sf_dir):
         # truth label: doc index i is the M%09d suffix of the mention IRI
         return F.substring(col, -9, 9).cast("bigint") % k
 
-    with _sized_shuffle(spark, n):
+    with loop_width(spark, _build_width(n)):
         triples = normalize_triples(parse_sources_to_triples(sources))
         mentions = extract_mentions(triples)
         edges = link_edges(block_candidates_by_key(mentions), threshold=0.9)
@@ -549,7 +539,7 @@ def q_kg_extended_verdicts(spark, sf_dir):
     if key not in _RUN_CACHE:
         n = _corpus_n(spark, sf_dir)
         sources = generate_product_sources(spark, n)
-        with _sized_shuffle(spark, n):
+        with loop_width(spark, _build_width(n)):
             _RUN_CACHE[key] = run_validation(spark, sources, PRODUCT_PROFILE)
     return hex_doc_id(_RUN_CACHE[key].verdicts)
 
@@ -589,7 +579,7 @@ def q_kg_qualified_verdicts(spark, sf_dir):
     if key not in _RUN_CACHE:
         n = _corpus_n(spark, sf_dir)
         sources = generate_qualified_sources(spark, n)
-        with _sized_shuffle(spark, n):
+        with loop_width(spark, _build_width(n)):
             _RUN_CACHE[key] = run_validation(spark, sources, QUALIFIED_PROFILE)
     return hex_doc_id(_RUN_CACHE[key].verdicts)
 
@@ -631,7 +621,7 @@ def q_kg_path_verdicts(spark, sf_dir):
     if key not in _RUN_CACHE:
         n = _corpus_n(spark, sf_dir)
         sources = generate_path_sources(spark, n)
-        with _sized_shuffle(spark, n):
+        with loop_width(spark, _build_width(n)):
             _RUN_CACHE[key] = run_validation(spark, sources, PATH_PROFILE)
     return hex_doc_id(_RUN_CACHE[key].verdicts)
 
@@ -679,7 +669,7 @@ def _rec_run(spark, sf_dir):
     if key not in _RUN_CACHE:
         n = _corpus_n(spark, sf_dir)
         sources = generate_recursive_path_sources(spark, n)
-        with _sized_shuffle(spark, n):
+        with loop_width(spark, _build_width(n)):
             _RUN_CACHE[key] = run_validation(spark, sources, REC_PATH_PROFILE)
         # the triples-only cache (if _rec_triples ran first) is now
         # redundant — the full run's triples supersede it; release the
@@ -741,7 +731,7 @@ def _rec_triples(spark, sf_dir):
 
         n = _corpus_n(spark, sf_dir)
         sources = generate_recursive_path_sources(spark, n)
-        with _sized_shuffle(spark, n):
+        with loop_width(spark, _build_width(n)):
             triples = parse_sources_to_triples(
                 add_doc_id(sources), repartition_by_doc=True
             ).persist()
@@ -787,7 +777,7 @@ def q_kg_sparql_verdicts(spark, sf_dir):
     if key not in _RUN_CACHE:
         n = _corpus_n(spark, sf_dir)
         sources = generate_sparql_rule_sources(spark, n)
-        with _sized_shuffle(spark, n):
+        with loop_width(spark, _build_width(n)):
             _RUN_CACHE[key] = run_validation(
                 spark, sources, SPARQL_RULE_PROFILE
             )

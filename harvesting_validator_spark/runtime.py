@@ -14,6 +14,11 @@ scratch graph it drops on task completion): snapshot the persistent-RDD
 id set before a unit of work, and unpersist everything new once the
 work's output is materialized (or superseded by a later checkpoint).
 
+The iterative loops built on that discipline live here too: ``loop_width``
+(the one owner of a loop's shuffle width) and ``path_closure`` (the
+path-doubling closure behind SPARQL ``p+``/``p*`` and SHACL
+``sh:oneOrMorePath``/``sh:zeroOrMorePath``).
+
 Works on the classic (py4j) PySpark backend used here; every helper
 degrades to a no-op if the gateway internals are unavailable (e.g. Spark
 Connect), so callers never need to guard.
@@ -21,7 +26,10 @@ Connect), so callers never need to guard.
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 
 def persistent_rdd_ids(spark: SparkSession) -> set[int]:
@@ -73,24 +81,75 @@ def checkpoint(df: DataFrame) -> tuple[DataFrame, set[int]]:
         return df, set()
 
 
-# --- bucketed scratch tables ---------------------------------------------------
-# Loop-invariant join inputs written as BUCKETED parquet tables (the
-# localCheckpoint-UnknownPartitioning workaround, queries/graphops.py)
-# register a session-catalog entry AND an on-disk directory; neither has
-# an RDD id, so the storage sweeps above never see them. Track them here
-# with the same discipline: record at creation, release once the
-# consuming query's output is materialized. After release, the query's
-# returned DataFrames must NOT be re-evaluated (the scan's files are
-# gone — same contract as releasing a localCheckpoint).
-_BUCKETED_TABLES: dict[int, dict[str, str]] = {}
+@contextmanager
+def loop_width(spark: SparkSession, target: int):
+    """Run the block with ``spark.sql.shuffle.partitions`` sized to an
+    iterative loop's data: ``target``, at least 8, never above the
+    session's width (corpus-scale loops keep their configured
+    parallelism; tiny fixpoints stop paying for near-empty reduce tasks).
+    Yields the width and restores the session's on exit. The one place
+    engine code changes session conf: concurrent queries in one session
+    would race on it, so give each concurrent caller its own
+    ``spark.newSession()``."""
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    width = min(int(prev), max(8, target))
+    spark.conf.set(key, str(width))
+    try:
+        yield width
+    finally:
+        spark.conf.set(key, prev)
 
 
-def track_bucketed_table(spark: SparkSession, name: str, path: str) -> None:
-    # r6: pagerank (the registry's last writer) moved to a persisted
-    # repartition, so nothing registers here today — the seam stays
-    # because bench.py (frozen) sweeps via release_bucketed_tables and
-    # any future bucketed scratch table must re-use this hygiene path.
-    _BUCKETED_TABLES.setdefault(id(spark), {})[name] = path
+# doubling rounds before path_closure gives up: paths up to length 2^16
+CLOSURE_MAX_ROUNDS = 16
+
+
+def path_closure(base: DataFrame, scoped: bool) -> DataFrame | None:
+    """Transitive closure R+ of the one-hop edge frame ``base``
+    (``[doc_id,] src, dst, dst_kind, dst_dt, dst_lang``) by path doubling:
+    R_{k+1} = R_k ∪ (R_k ∘ R_k), so reachable length doubles per round
+    and the fixpoint arrives in O(log diameter) rounds. ``scoped`` keys
+    every join on ``doc_id`` (per-document reachability). Each round is
+    one eager checkpoint (lineage truncation) plus its count, which is
+    the fixpoint probe; the superseded round is released at once, so the
+    returned frame is backed by exactly one resident checkpoint, its
+    owner's to sweep. Cycles are finite sets under distinct. Returns
+    None when no fixpoint arrives in ``CLOSURE_MAX_ROUNDS`` rounds, for
+    the caller to raise its own error."""
+    spark = base.sparkSession
+    keys = ["doc_id"] if scoped else []
+    reach, held = checkpoint(base)
+    n = reach.count()
+    with loop_width(spark, n // 10000 + 4):
+        for _ in range(CLOSURE_MAX_ROUNDS):
+            # a literal has no outgoing edges: never compose THROUGH a
+            # literal dst (phantom reachability when a literal's text
+            # equals a subject label); literal dsts stay FINAL endpoints
+            cond = (F.col("x.dst") == F.col("y.src")) & (
+                F.col("x.dst_kind") != "literal"
+            )
+            for k in keys:
+                cond = cond & (F.col(f"x.{k}") == F.col(f"y.{k}"))
+            ext = (
+                reach.alias("x")
+                .join(reach.alias("y"), cond)
+                .select(
+                    *[F.col(f"x.{k}").alias(k) for k in keys],
+                    F.col("x.src").alias("src"),
+                    *[F.col(f"y.{c}").alias(c)
+                      for c in ("dst", "dst_kind", "dst_dt", "dst_lang")],
+                )
+            )
+            nxt, ids = checkpoint(reach.unionByName(ext).distinct())
+            m = nxt.count()
+            unpersist_rdds(spark, held)
+            reach, held = nxt, ids
+            if m == n:
+                return reach
+            n = m
+    unpersist_rdds(spark, held)
+    return None
 
 
 def swap_persisted(handles: list, df):
@@ -111,19 +170,6 @@ def swap_persisted(handles: list, df):
 
 
 def release_bucketed_tables(spark: SparkSession) -> int:
-    """DROP every tracked bucketed scratch table of this session and
-    delete its files; returns how many were released. Degrades to
-    best-effort per table (a missing dir or already-dropped entry is not
-    an error — release is idempotent)."""
-    from harvesting_validator_spark import fs
-
-    tables = _BUCKETED_TABLES.pop(id(spark), {})
-    released = 0
-    for name, path in tables.items():
-        try:
-            spark.sql(f"DROP TABLE IF EXISTS `{name}`")
-            fs.delete(spark, path, recursive=True)
-            released += 1
-        except Exception:
-            pass
-    return released
+    # no query writes bucketed scratch tables since pagerank moved to a
+    # persisted repartition; kept because the frozen bench.py calls it
+    return 0

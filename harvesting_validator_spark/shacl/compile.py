@@ -42,6 +42,7 @@ import functools
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from harvesting_validator_spark import runtime
 from harvesting_validator_spark.shacl.model import (
     RDF_TYPE,
     SEVERITY_VIOLATION,
@@ -519,21 +520,10 @@ def _path_value_frames(
         )
     if rec_specs:
         # recursive paths (p* / p+): per-predicate DIRECTED transitive
-        # closure by path doubling — R_{k+1} = R_k ∪ (R_k ∘ R_k), so
-        # reachable length doubles per round and the fixpoint arrives in
-        # O(log diameter) rounds (the union-find O(log d) argument,
-        # kg/canonicalize.py). The closure runs ONLY on the slice
-        # pred == p (within-doc edges; docs are parse-bounded), each
-        # round localCheckpoints to truncate lineage and the count IS
-        # the fixpoint probe; superseded checkpoints are released
-        # immediately (peak storage O(1) closure tables). Cycles are
-        # finite sets under distinct — a focus on a p-cycle reaches
-        # itself, which oneOrMore counts per spec.
-        from harvesting_validator_spark.runtime import (
-            persistent_rdd_ids,
-            unpersist_rdds,
-        )
-
+        # closure over the slice pred == p (within-doc edges; docs are
+        # parse-bounded) by the shared path-doubling fixpoint
+        # (runtime.path_closure, also behind SPARQL p+/p*). A focus on a
+        # p-cycle reaches itself, which oneOrMore counts per spec.
         def _closure(pred: str) -> DataFrame:
             base = triples.filter(F.col("pred") == pred).select(
                 "doc_id",
@@ -543,61 +533,16 @@ def _path_value_frames(
                 F.col("obj_datatype").alias("dst_dt"),
                 F.col("obj_lang").alias("dst_lang"),
             ).distinct()
-            pre = persistent_rdd_ids(spark)
-            reach = base.localCheckpoint()
-            held = persistent_rdd_ids(spark) - pre
-            n = reach.count()
-            # size the loop's shuffles to the edge count (the house
-            # pattern for iterative plans — CLAUDE.md; same sizing as
-            # the query-side closure, sparql.py::_closure_pairs)
-            prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-            loop_parts = max(8, min(int(prev_parts), n // 10000 + 4))
-            spark.conf.set("spark.sql.shuffle.partitions", str(loop_parts))
-            try:
-                return _closure_loop(reach, n, pre, held)
-            finally:
-                spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-
-        def _closure_loop(reach, n, pre, held) -> DataFrame:
-            for _ in range(16):  # paths up to length 2^16 per doc
-                ext = (
-                    reach.alias("x")
-                    .join(
-                        reach.alias("y"),
-                        (F.col("x.doc_id") == F.col("y.doc_id"))
-                        & (F.col("x.dst") == F.col("y.src"))
-                        # a literal has no outgoing edges: never compose
-                        # THROUGH a literal dst (phantom reachability
-                        # when a literal's text equals a subject label);
-                        # literal dsts stay as FINAL endpoints — the
-                        # same guard the sequence-path intermediates use
-                        & (F.col("x.dst_kind") != "literal"),
-                    )
-                    .select(
-                        F.col("x.doc_id").alias("doc_id"),
-                        F.col("x.src").alias("src"),
-                        F.col("y.dst").alias("dst"),
-                        F.col("y.dst_kind").alias("dst_kind"),
-                        F.col("y.dst_dt").alias("dst_dt"),
-                        F.col("y.dst_lang").alias("dst_lang"),
-                    )
+            reach = runtime.path_closure(base, scoped=True)
+            if reach is None:
+                raise RuntimeError(
+                    f"transitive closure of <{pred}> did not converge in "
+                    f"{runtime.CLOSURE_MAX_ROUNDS} doubling rounds "
+                    f"(within-doc path length > "
+                    f"{2 ** runtime.CLOSURE_MAX_ROUNDS}) — refusing to "
+                    "under-validate"
                 )
-                nxt = reach.unionByName(ext).distinct().localCheckpoint()
-                m = nxt.count()
-                new_ids = persistent_rdd_ids(spark) - pre - held
-                # nxt is materialized: the prior round's blocks are
-                # unreachable from any live plan — release them now
-                unpersist_rdds(spark, held)
-                held = new_ids
-                reach = nxt
-                if m == n:
-                    return reach
-                n = m
-            raise RuntimeError(
-                f"transitive closure of <{pred}> did not converge in 16 "
-                "doubling rounds (within-doc path length > 65536) — "
-                "refusing to under-validate"
-            )
+            return reach
 
         closures = {
             pred: _closure(pred) for pred in sorted(

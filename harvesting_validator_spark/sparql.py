@@ -172,6 +172,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from harvesting_validator_spark import runtime
+
 RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
 XSD = "http://www.w3.org/2001/XMLSchema#"
 DOC_GRAPH_PREFIX = "urn:doc:"  # GRAPH <urn:doc:HEX> names one document
@@ -1567,23 +1569,17 @@ class _Compiler:
         """Reachability pairs of ``cp.pred`` under the closure operator:
         columns ``[doc_id,] src, dst, dst_kind, dst_dt, dst_lang``.
 
-        ``+`` runs a per-predicate path-doubling fixpoint (R ∪ R∘R per
-        round — O(log diameter) materialized rounds, each round
-        localCheckpointed to truncate lineage with superseded
-        checkpoints released immediately; the same loop discipline as
-        the SHACL engine's shape-side closure, shacl/compile.py).
-        ``*`` additionally unions the zero step over the graph's
+        ``+`` runs the shared path-doubling fixpoint
+        (``runtime.path_closure``, also behind the SHACL recursive
+        paths). ``*`` additionally unions the zero step over the graph's
         resources; ``?`` is just identity ∪ one hop (no fixpoint).
         Cache lifetime contract (VERDICT r5 what's-wrong #3): entries in
         ``self._closure_cache`` live exactly as long as this compilation
         — every ``sparql_select``/``sparql_update`` call compiles fresh,
         so a cached reachability frame can never be served against a
         differently-filtered triple frame. Do not reuse a compiled query
-        object across triple frames. The loop also temporarily sizes the
-        SESSION-global ``spark.sql.shuffle.partitions`` (restored in
-        ``finally``) — the same single-query-at-a-time contract as
-        kg/canonicalize.py: concurrent queries in one session must use
-        ``spark.newSession()``.
+        object across triple frames. The loop sizes its shuffle width
+        through ``runtime.loop_width`` (see its concurrency note).
 
         Inside GRAPH the pairs carry doc_id and every join is keyed on
         it (per-document reachability — a constant graph IRI prunes the
@@ -1681,71 +1677,13 @@ class _Compiler:
         if cp.op == "?":
             out = base.unionByName(ident).distinct()
         else:
-            from harvesting_validator_spark.runtime import (
-                persistent_rdd_ids,
-                unpersist_rdds,
-            )
-
-            spark = self.triples.sparkSession
-            pre = persistent_rdd_ids(spark)
-            reach = base.localCheckpoint()
-            held = persistent_rdd_ids(spark) - pre
-            n = reach.count()
-            # size the loop's shuffles to the edge count (the house
-            # pattern for iterative plans, kg/canonicalize.py): each
-            # doubling round is a join + distinct over the reach table,
-            # and near-empty reduce tasks dominate small fixpoints.
-            # Session-width stays the ceiling, so corpus-scale closures
-            # keep their configured parallelism.
-            prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-            loop_parts = max(8, min(int(prev_parts), n // 10000 + 4))
-            spark.conf.set("spark.sql.shuffle.partitions", str(loop_parts))
-            try:
-                for _ in range(16):  # paths up to length 2^16
-                    # a literal has no outgoing edges: never compose
-                    # THROUGH a literal dst, else a literal whose text
-                    # equals a subject's IRI/bnode label creates
-                    # phantom reachability (review-wave fix; literal
-                    # dsts stay as FINAL endpoints)
-                    cond = (
-                        (F.col("x.dst") == F.col("y.src"))
-                        & (F.col("x.dst_kind") != "literal")
-                    )
-                    if scoped:
-                        cond = cond & (
-                            F.col("x.doc_id") == F.col("y.doc_id")
-                        )
-                    ext = (
-                        reach.alias("x")
-                        .join(reach.alias("y"), cond)
-                        .select(
-                            *[F.col(f"x.{c}").alias(c) for c in gcols],
-                            F.col("x.src").alias("src"),
-                            F.col("y.dst").alias("dst"),
-                            F.col("y.dst_kind").alias("dst_kind"),
-                            F.col("y.dst_dt").alias("dst_dt"),
-                            F.col("y.dst_lang").alias("dst_lang"),
-                        )
-                    )
-                    nxt = (
-                        reach.unionByName(ext).distinct().localCheckpoint()
-                    )
-                    m = nxt.count()
-                    new_ids = persistent_rdd_ids(spark) - pre - held
-                    unpersist_rdds(spark, held)
-                    held = new_ids
-                    reach = nxt
-                    if m == n:
-                        break
-                    n = m
-                else:
-                    raise SparqlError(
-                        f"transitive closure of <{cp.pred}> did not "
-                        "converge in 16 doubling rounds (path length > "
-                        "65536)"
-                    )
-            finally:
-                spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+            reach = runtime.path_closure(base, scoped)
+            if reach is None:
+                raise SparqlError(
+                    f"transitive closure of <{cp.pred}> did not converge "
+                    f"in {runtime.CLOSURE_MAX_ROUNDS} doubling rounds "
+                    f"(path length > {2 ** runtime.CLOSURE_MAX_ROUNDS})"
+                )
             out = (
                 reach if cp.op == "+"
                 else reach.unionByName(ident).distinct()

@@ -157,3 +157,88 @@ def test_bench_style_sweep_after_pagerank(spark, sf_dir, sentinels):
     _assert_at_baseline(spark, base, sentinels)
     assert len(_PR_EDGE_CACHE) == 1  # handle for the (now-released) last run
     _PR_EDGE_CACHE.clear()
+
+
+
+CHAIN_SHAPE = """
+@prefix sh: <http://www.w3.org/ns/shacl#> .
+@prefix ex: <http://ex/> .
+ex:ChainShape a sh:NodeShape ;
+  sh:targetClass ex:Root ;
+  sh:property [ sh:path [ sh:oneOrMorePath ex:p ] ; sh:maxCount 9 ] .
+"""
+
+
+def _chain(spark, nodes: int):
+    """n0 -p-> n1 -p-> ... in one document, n0 typed ex:Root."""
+    ex = "http://ex/"
+    rows = [
+        (b"\x01", f"{ex}n{i}", ex + "p", f"{ex}n{i + 1}", "iri", None, None)
+        for i in range(nodes - 1)
+    ] + [(b"\x01", ex + "n0",
+          "http://www.w3.org/1999/02/22-rdf-syntax-ns#type", ex + "Root",
+          "iri", None, None)]
+    return spark.createDataFrame(
+        rows,
+        "doc_id binary, subj string, pred string, obj_value string, "
+        "obj_kind string, obj_datatype string, obj_lang string",
+    )
+
+
+def _closure_plus(triples):
+    from harvesting_validator_spark.sparql import sparql_select
+
+    q = "SELECT ?r WHERE { <http://ex/n0> <http://ex/p>+ ?r }"
+    return sparql_select(triples, q).collect()
+
+
+def _shacl_violations(spark, triples):
+    from harvesting_validator_spark.shacl.compile import validate
+    from harvesting_validator_spark.shacl.parse import parse_shapes_turtle
+
+    shapes = parse_shapes_turtle(CHAIN_SHAPE)
+    return validate(triples, shapes, spark, cache_intermediate=False).count()
+
+
+def test_sparql_closure_releases_superseded_rounds(spark, sentinels):
+    """p+ over an 8-node chain (four doubling rounds, five checkpoints)
+    keeps only the checkpoint its result is backed by: each superseded
+    round is freed inside the loop."""
+    base = _storage_ids(spark)
+    assert len(_closure_plus(_chain(spark, 8))) == 7
+    resident = _storage_ids(spark) - base
+    assert len(resident) <= 1, f"closure leaked {len(resident)} RDDs"
+    release_new_rdds(spark, base, blocking=True)
+    _assert_at_baseline(spark, base, sentinels)
+
+
+def test_shacl_closure_releases_superseded_rounds(spark, sentinels):
+    """Same storage bound for sh:oneOrMorePath, one closure predicate."""
+    base = _storage_ids(spark)
+    assert _shacl_violations(spark, _chain(spark, 8)) == 0
+    resident = _storage_ids(spark) - base
+    assert len(resident) <= 1, f"closure leaked {len(resident)} RDDs"
+    release_new_rdds(spark, base, blocking=True)
+    _assert_at_baseline(spark, base, sentinels)
+
+
+def test_closure_divergence_guard(spark, sentinels, monkeypatch):
+    """With the round cap at 1 a 3-hop chain is not at its fixpoint (its
+    count still grows in the first doubling round): SPARQL p+ raises
+    SparqlError and the SHACL path refuses to under-validate, and the
+    capped closure frees its last checkpoint before giving up."""
+    from harvesting_validator_spark import runtime
+    from harvesting_validator_spark.sparql import SparqlError
+
+    chain = _chain(spark, 4)
+    base = _storage_ids(spark)
+    assert len(_closure_plus(chain)) == 3
+    assert _shacl_violations(spark, chain) == 0
+    release_new_rdds(spark, base, blocking=True)
+
+    monkeypatch.setattr(runtime, "CLOSURE_MAX_ROUNDS", 1)
+    with pytest.raises(SparqlError, match="did not converge in 1 doubling"):
+        _closure_plus(chain)
+    with pytest.raises(RuntimeError, match="refusing to under-validate"):
+        _shacl_violations(spark, chain)
+    _assert_at_baseline(spark, base, sentinels)
