@@ -29,6 +29,16 @@ from harvesting_validator_spark.runtime import (
     unpersist_rdds,
 )
 
+# rounds between checkpoint+fixpoint-probe driver round-trips. Each probe
+# is a blocking driver job; with pointer jumping converging in O(log d)
+# rounds, probing every 2nd round halves the serial driver cost at worst
+# one redundant (cheap, already-converged) round — measured r2: per-round
+# probes made kg_canonical_graph swing 17s -> 38s under host noise because
+# every round paid TWO job launches (eager checkpoint + probe). Unprobed
+# rounds stay lazy: their joins fuse into the next probed round's plan, so
+# 2 rounds cost ONE job.
+CHECKPOINT_EVERY = 2
+
 
 def _sort_key(col):
     """Canonical-id ordering: IRIs before blank nodes ('_:' would
@@ -45,20 +55,12 @@ def _strip_key(col):
 
 
 def connected_components(
-    edges: DataFrame, max_iterations: int = 50, checkpoint_every: int = 2
+    edges: DataFrame, max_iterations: int = 50
 ) -> DataFrame:
     """edges(src, dst) -> (entity, canonical). Includes singletons only if
     they appear in an edge; callers union isolated nodes afterwards.
     Canonical = the IRI-preferring minimum member of the component.
-
-    checkpoint_every: rounds between checkpoint+fixpoint-probe driver
-    round-trips. Each probe is a blocking driver job; with pointer jumping
-    converging in O(log d) rounds, probing every 2nd round halves the
-    serial driver cost at worst one redundant (cheap, already-converged)
-    round — measured r2: per-round probes made kg_canonical_graph swing
-    17s -> 38s under host noise because every round paid TWO job launches
-    (eager checkpoint + probe). Unprobed rounds stay lazy: their joins fuse
-    into the next probed round's plan, so 2 rounds cost ONE job.
+    Probes for the fixpoint every ``CHECKPOINT_EVERY`` rounds.
 
     The loop sizes its label shuffles through ``runtime.loop_width`` (see
     its concurrency note)."""
@@ -170,7 +172,7 @@ def connected_components(
                 # graphs already converged by the min-of-neighbors init —
                 # cliques/stars — after ONE round; deep chains amortize the
                 # probes at 1/k per round thereafter
-                probe = it % checkpoint_every == 0 or it == max_iterations - 1
+                probe = it % CHECKPOINT_EVERY == 0 or it == max_iterations - 1
                 if probe:
                     # eager checkpoint materializes the fused rounds; the probe
                     # then reads cached rows. chg reflects only the LAST

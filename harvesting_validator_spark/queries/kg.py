@@ -26,11 +26,19 @@ from harvesting_validator_spark.runtime import loop_width
 from harvesting_validator_spark.sources.synthetic import (
     APPLICATION_PROFILE,
     ENTITY_PROFILE,
+    PATH_PROFILE,
     PRODUCT_PROFILE,
+    QUALIFIED_PROFILE,
+    REC_PATH_PROFILE,
+    SPARQL_RULE_PROFILE,
     generate_chain_sources,
     generate_entity_sources,
+    generate_path_sources,
     generate_product_sources,
+    generate_qualified_sources,
+    generate_recursive_path_sources,
     generate_sources,
+    generate_sparql_rule_sources,
 )
 
 _RUN_CACHE: dict = {}
@@ -52,16 +60,23 @@ def _build_width(n_docs: int) -> int:
     return n_docs // 250 + 4
 
 
-def _run(spark, sf_dir):
-    """One validation run per (session, sf_dir); queries share the cached
-    triples/violations so the driver's per-query calls don't re-parse."""
-    key = (id(spark), sf_dir)
+def _validation_run(spark, sf_dir, tag, generate, profile):
+    """One validation run of ``profile`` over ``generate(spark, n)`` per
+    (session, sf_dir, tag); queries share the cached triples/violations
+    so the driver's per-query calls don't re-parse."""
+    key = (id(spark), sf_dir, tag)
     if key not in _RUN_CACHE:
         n = _corpus_n(spark, sf_dir)
-        sources = generate_sources(spark, n)
+        sources = generate(spark, n)
         with loop_width(spark, _build_width(n)):
-            _RUN_CACHE[key] = run_validation(spark, sources, APPLICATION_PROFILE)
+            _RUN_CACHE[key] = run_validation(spark, sources, profile)
     return _RUN_CACHE[key]
+
+
+def _run(spark, sf_dir):
+    return _validation_run(
+        spark, sf_dir, "app", generate_sources, APPLICATION_PROFILE
+    )
 
 
 # oracle prelude: reconstruct (i, doc_id, mode) exactly as generate_sources
@@ -535,13 +550,9 @@ def q_kg_extended_verdicts(spark, sf_dir):
     the extension constraint components (shacl/compile.py pass 2 ranges/
     languageIn, pass 3b uniqueLang, pass 5 property pairs) end-to-end at
     the driver, not just in unit tests."""
-    key = (id(spark), sf_dir, "ext")
-    if key not in _RUN_CACHE:
-        n = _corpus_n(spark, sf_dir)
-        sources = generate_product_sources(spark, n)
-        with loop_width(spark, _build_width(n)):
-            _RUN_CACHE[key] = run_validation(spark, sources, PRODUCT_PROFILE)
-    return hex_doc_id(_RUN_CACHE[key].verdicts)
+    return hex_doc_id(_validation_run(
+        spark, sf_dir, "ext", generate_product_sources, PRODUCT_PROFILE
+    ).verdicts)
 
 
 O_EXTENDED_VERDICTS = """
@@ -570,18 +581,9 @@ def q_kg_qualified_verdicts(spark, sf_dir):
     min/max counts via the recursive conformance probe, node-level
     sh:not) and the implicit target selectors (sh:targetSubjectsOf) at
     the driver, closed-form by doc mode (i%6)."""
-    from harvesting_validator_spark.sources.synthetic import (
-        QUALIFIED_PROFILE,
-        generate_qualified_sources,
-    )
-
-    key = (id(spark), sf_dir, "qual")
-    if key not in _RUN_CACHE:
-        n = _corpus_n(spark, sf_dir)
-        sources = generate_qualified_sources(spark, n)
-        with loop_width(spark, _build_width(n)):
-            _RUN_CACHE[key] = run_validation(spark, sources, QUALIFIED_PROFILE)
-    return hex_doc_id(_RUN_CACHE[key].verdicts)
+    return hex_doc_id(_validation_run(
+        spark, sf_dir, "qual", generate_qualified_sources, QUALIFIED_PROFILE
+    ).verdicts)
 
 
 O_QUALIFIED_VERDICTS = """
@@ -612,18 +614,9 @@ def q_kg_path_verdicts(spark, sf_dir):
     sequence; shacl/compile.py _path_value_frames) end-to-end at the
     driver, closed-form by doc mode (i%6): see
     generate_path_sources."""
-    from harvesting_validator_spark.sources.synthetic import (
-        PATH_PROFILE,
-        generate_path_sources,
-    )
-
-    key = (id(spark), sf_dir, "path")
-    if key not in _RUN_CACHE:
-        n = _corpus_n(spark, sf_dir)
-        sources = generate_path_sources(spark, n)
-        with loop_width(spark, _build_width(n)):
-            _RUN_CACHE[key] = run_validation(spark, sources, PATH_PROFILE)
-    return hex_doc_id(_RUN_CACHE[key].verdicts)
+    return hex_doc_id(_validation_run(
+        spark, sf_dir, "path", generate_path_sources, PATH_PROFILE
+    ).verdicts)
 
 
 O_PATH_VERDICTS = """
@@ -660,25 +653,17 @@ def _rec_run(spark, sf_dir):
     """Cached recursive-path validation run — the shared accessor for
     this module and sparqlq's reachable rollup (reaching into the cache
     with a hand-copied key tuple broke silently on key-shape changes)."""
-    from harvesting_validator_spark.sources.synthetic import (
+    run = _validation_run(
+        spark, sf_dir, "recpath", generate_recursive_path_sources,
         REC_PATH_PROFILE,
-        generate_recursive_path_sources,
     )
-
-    key = (id(spark), sf_dir, "recpath")
-    if key not in _RUN_CACHE:
-        n = _corpus_n(spark, sf_dir)
-        sources = generate_recursive_path_sources(spark, n)
-        with loop_width(spark, _build_width(n)):
-            _RUN_CACHE[key] = run_validation(spark, sources, REC_PATH_PROFILE)
-        # the triples-only cache (if _rec_triples ran first) is now
-        # redundant — the full run's triples supersede it; release the
-        # persisted parse instead of pinning two copies
-        t_key = (id(spark), sf_dir, "recpath-triples")
-        stale = _RUN_CACHE.pop(t_key, None)
-        if stale is not None:
-            stale.cleanup()
-    return _RUN_CACHE[key]
+    # the triples-only cache (if _rec_triples ran first) is now
+    # redundant — the full run's triples supersede it; release the
+    # persisted parse instead of pinning two copies
+    stale = _RUN_CACHE.pop((id(spark), sf_dir, "recpath-triples"), None)
+    if stale is not None:
+        stale.cleanup()
+    return run
 
 
 class _TriplesOnlyRun:
@@ -725,9 +710,6 @@ def _rec_triples(spark, sf_dir):
         from harvesting_validator_spark.sources.rdf_parse import (
             parse_sources_to_triples,
         )
-        from harvesting_validator_spark.sources.synthetic import (
-            generate_recursive_path_sources,
-        )
 
         n = _corpus_n(spark, sf_dir)
         sources = generate_recursive_path_sources(spark, n)
@@ -768,20 +750,10 @@ def q_kg_sparql_verdicts(spark, sf_dir):
     pass 7: the SELECT compiles through the engine's own SPARQL compiler
     with per-document scoping) end-to-end at the driver, closed-form by
     doc mode (i%4): see generate_sparql_rule_sources."""
-    from harvesting_validator_spark.sources.synthetic import (
+    return hex_doc_id(_validation_run(
+        spark, sf_dir, "sparqlrule", generate_sparql_rule_sources,
         SPARQL_RULE_PROFILE,
-        generate_sparql_rule_sources,
-    )
-
-    key = (id(spark), sf_dir, "sparqlrule")
-    if key not in _RUN_CACHE:
-        n = _corpus_n(spark, sf_dir)
-        sources = generate_sparql_rule_sources(spark, n)
-        with loop_width(spark, _build_width(n)):
-            _RUN_CACHE[key] = run_validation(
-                spark, sources, SPARQL_RULE_PROFILE
-            )
-    return hex_doc_id(_RUN_CACHE[key].verdicts)
+    ).verdicts)
 
 
 O_SPARQL_VERDICTS = """

@@ -1,8 +1,9 @@
 """SparkSession factory tuned for the KG-construction pipeline.
 
-Local-mode defaults match the sandbox (local[32], single JVM). On a real
-cluster the same builder works via spark-submit --py-files; only master /
-memory flags change. AQE + skew-join splitting are on because the triple
+Local mode defaults to one task slot per core this process may run on
+(``SPARK_GRAFT_CPUS`` overrides), single JVM. On a real cluster the same
+builder works via spark-submit --py-files; only master / memory flags
+change. AQE + skew-join splitting are on because the triple
 table is inherently skewed on `pred` (rdf:type dominates) and LSH band
 joins produce hot buckets (SURVEY.md §4).
 """
@@ -14,20 +15,32 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_cores() -> int:
+    """``SPARK_GRAFT_CPUS`` if set, else the cores this process may run on
+    (its CPU affinity, so taskset/cpuset pinning is honoured)."""
+    env = os.environ.get("SPARK_GRAFT_CPUS")
+    return int(env) if env else len(os.sched_getaffinity(0))
+
+
+def _default_shuffle_partitions(master: str, cpus: int) -> int:
+    """2x the master's cores: slack for stragglers without tiny-task
+    overhead. ``local[N]`` counts N; ``local[*]`` or a master without a
+    core count counts ``cpus``. A 1000-executor cluster run would set
+    ~2-3x total cores via spark-submit conf instead."""
+    n = master[master.find("[") + 1 : master.find("]")] if "[" in master else "*"
+    return 2 * (cpus if n == "*" else int(n))
+
+
 def get_spark(
     app_name: str = "harvesting_validator_spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = _default_cores()
     master = master or f"local[{cpus}]"
-    # shuffle partitions = 2x cores: slack for stragglers without tiny-task
-    # overhead; a 1000-executor cluster run would set ~2-3x total cores via
-    # spark-submit conf instead.
     if shuffle_partitions is None:
-        n = master[master.find("[") + 1 : master.find("]")] if "[" in master else "32"
-        shuffle_partitions = 2 * (cpus if n == "*" else int(n))
+        shuffle_partitions = _default_shuffle_partitions(master, cpus)
 
     builder = (
         SparkSession.builder.master(master)

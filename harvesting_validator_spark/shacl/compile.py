@@ -86,6 +86,9 @@ VIOLATIONS_COLUMNS = (
 
 _MAX_NESTING_DEPTH = 5
 
+# the value columns a path step lands on (ftrip's object side)
+_PATH_VALUE_COLS = ("obj_value", "obj_kind", "obj_datatype", "obj_lang")
+
 
 def _union_all(dfs: list[DataFrame]) -> DataFrame | None:
     dfs = [d for d in dfs if d is not None]
@@ -334,197 +337,91 @@ def _path_value_frames(
     focus: DataFrame, triples: DataFrame, shapes: ShapesGraph,
     spark: SparkSession,
 ) -> DataFrame | None:
-    """Synthetic ftrip rows for property-path EXPRESSIONS (r5): one row
-    per (doc, focus, shape, path-id, value node), where ``pred`` carries
-    the path's display id (model.py PropertyShape.path) so every
-    downstream pass — the single-scan value constraints, the cardinality
-    groupBy, sh:class, uniqueLang, property pairs, qualified probes —
-    consumes path values exactly like plain predicate values with ZERO
-    changes. Closed shapes are untouched: the SHACL spec whitelists only
-    direct IRI paths, and the synthetic ids never match a document
-    predicate.
+    """Synthetic ftrip rows for property-path EXPRESSIONS: one row per
+    (doc, focus, shape, path-id, value node), where ``pred`` carries the
+    path's display id (model.py PropertyShape.path) so every downstream
+    pass — the single-scan value constraints, the cardinality groupBy,
+    sh:class, uniqueLang, property pairs, qualified probes — consumes
+    path values exactly like plain predicate values. Closed shapes are
+    untouched: the SHACL spec whitelists only direct IRI paths, and the
+    synthetic ids never match a document predicate.
 
-    * inverse paths: value nodes = subjects of (v, p, focus) — ONE join
-      of the focus table against triples keyed (doc_id, object). This is
-      the one join in the engine keyed on the object side; it cannot
-      reuse the (doc_id, subj) exchange by definition of inversion.
-    * sequence paths: nodes reachable by chaining the hops, each hop a
-      join keyed (doc_id, node) — the same key prefix as ftrip. Each
-      step may be FORWARD (IRI member) or INVERSE ([sh:inversePath
-      <iri>] member, r5 wave 3 — join flipped to the object side).
-    * alternative paths (r5): values over ANY member step — forward
-      members share one focus⋈triples join against a (shape, path,
-      member) spec, inverse members one object-side join; the union is
-      distinct-ed per path id so a value reachable via two members (or
-      both directions) counts once.
-    * zero-or-one paths (r5): the focus node itself (the zero step —
-      always present, so sh:minCount 1 is trivially met per spec) union
-      the one-hop objects; a self-loop collapses with the zero step
-      under the same distinct. Focus nodes are never literals here
-      (compute_focus filters literal targets), so subject-kind typing
-      of the zero step is exact.
-    * recursive paths p* / p+ (r5): per-predicate directed transitive
-      closure by path doubling (O(log diameter) fixpoint rounds, see
-      the inline note), then one focus⋈closure join; p* additionally
-      unions the zero step.
+    One evaluator for every path kind, built from three primitives:
 
-    Rows are DISTINCT per (focus, path, value term): SHACL counts value
-    NODES, and a diamond (two routes to the same value) must count once.
-    Returns None when the profile declares no path expressions (the
-    reference profiles — plan unchanged)."""
-    inv_rows = sorted({
-        (s.iri, p.path, p.path_preds[0])
-        for s in shapes.shapes for p in s.properties
-        if p.path_kind == "inverse"
-    })
-    seq_specs = sorted({
-        (s.iri, p.path, p.path_preds,
-         p.path_dirs or (False,) * len(p.path_preds))
-        for s in shapes.shapes for p in s.properties
-        if p.path_kind == "sequence"
-    })
-    # alternative members carry a per-member direction (r5 wave 3):
-    # forward members ride the forward hop frame, inverse members the
-    # inverse hop frame; the two are unioned per path id before the
-    # value-node distinct so a node reachable both ways counts ONCE
-    alt_rows = sorted({
-        (s.iri, p.path, member)
-        for s in shapes.shapes for p in s.properties
-        if p.path_kind == "alternative"
-        for member, inv in zip(
-            p.path_preds, p.path_dirs or (False,) * len(p.path_preds)
-        )
-        if not inv
-    })
-    alt_inv_rows = sorted({
-        (s.iri, p.path, member)
-        for s in shapes.shapes for p in s.properties
-        if p.path_kind == "alternative"
-        for member, inv in zip(
-            p.path_preds, p.path_dirs or (False,) * len(p.path_preds)
-        )
-        if inv
-    })
-    zoo_rows = sorted({
-        (s.iri, p.path, p.path_preds[0])
-        for s in shapes.shapes for p in s.properties
-        if p.path_kind == "zero_or_one"
-    })
-    rec_specs = sorted({
-        (s.iri, p.path, p.path_preds[0], p.path_kind)
-        for s in shapes.shapes for p in s.properties
-        if p.path_kind in ("zero_or_more", "one_or_more")
-    })
-    if (
-        not inv_rows and not seq_specs and not alt_rows and not alt_inv_rows
-        and not zoo_rows and not rec_specs
-    ):
+    * the zero step — the focus node itself, its kind derived from the
+      subject (focus nodes are never literals: compute_focus filters
+      literal targets). It seeds every path and is a value of its own
+      for ``p?`` and ``p*``.
+    * ``hop(frontier, preds, inverse)`` — one join of the frontier
+      against triples keyed (doc_id, node), the same key prefix as
+      ftrip. Forward matches ``subj`` and lands on the object's value,
+      kind, datatype and language; inverse matches a non-literal
+      ``obj_value`` and lands on ``subj`` (kind derived, no datatype or
+      language). The frontier never steps FROM a literal. Inverse hops
+      are the only joins in the engine keyed on the object side; they
+      cannot reuse the (doc_id, subj) exchange by definition.
+    * the closure of ``p`` — per-predicate directed transitive closure
+      over the slice pred == p by path doubling (runtime.path_closure,
+      also behind SPARQL p+/p*), one per predicate shared across shapes.
+      It enters as the edge set of a forward hop.
+
+    inverse, sequence (each step forward or inverse) and ``p?`` are
+    chains of hops; an alternative is at most one forward and one
+    inverse hop, each over its member set; ``p+`` and ``p*`` hop over
+    the closure (a focus on a p-cycle reaches itself, which ``p+``
+    counts per spec); ``p?`` and ``p*`` add the zero step.
+
+    Rows are DISTINCT per path id (and between sequence hops, so a
+    diamond's fan-out does not multiply): SHACL counts value NODES, and
+    a value reachable by two routes counts once. Returns None when the
+    profile declares no path expressions (the reference profiles — plan
+    unchanged)."""
+    paths: dict[str, tuple] = {}
+    for s in shapes.shapes:
+        for p in s.properties:
+            if p.path_kind == "iri":
+                continue
+            dirs = p.path_dirs or (p.path_kind == "inverse",) * len(p.path_preds)
+            paths.setdefault(
+                p.path, (p.path_kind, tuple(zip(p.path_preds, dirs)), set())
+            )[2].add(s.iri)
+    if not paths:
         return None
+
+    null = F.lit(None).cast("string")
 
     def subj_kind(col):
         return F.when(col.startswith("_:"), F.lit("bnode")).otherwise(
             F.lit("iri")
         )
 
-    frames: list[DataFrame] = []
-
-    def _inverse_hop_frame(spec_rows):
-        """focus⋈triples INVERSE hop (value nodes = subjects of triples
-        whose object is the focus) gated by a broadcast (shape, path,
-        pred) spec — shared by standalone inverse paths and the inverse
-        members of alternatives."""
-        ispec = F.broadcast(spark.createDataFrame(
-            spec_rows, "i_shape string, i_path string, i_pred string"
-        ))
+    def hop(frontier, preds, inverse, edges=triples):
+        edges = edges.filter(F.col("pred").isin(list(preds)))
+        if inverse:
+            edges = edges.filter(F.col("obj_kind") != "literal")
+            at = "obj_value"
+            land = (F.col("t.subj"), subj_kind(F.col("t.subj")), null, null)
+        else:
+            at = "subj"
+            land = [F.col("t." + c) for c in _PATH_VALUE_COLS]
         return (
-            focus.alias("f")
+            frontier.filter(F.col("obj_kind") != "literal").alias("c")
             .join(
-                triples.alias("t"),
-                (F.col("f.doc_id") == F.col("t.doc_id"))
-                & (F.col("f.focus_node") == F.col("t.obj_value"))
-                & (F.col("t.obj_kind") != "literal"),
-            )
-            .join(
-                ispec,
-                (F.col("f.shape") == F.col("i_shape"))
-                & (F.col("t.pred") == F.col("i_pred")),
+                edges.alias("t"),
+                (F.col("c.doc_id") == F.col("t.doc_id"))
+                & (F.col("c.obj_value") == F.col("t." + at)),
             )
             .select(
                 F.col("t.doc_id").alias("doc_id"),
-                "f.focus_node", "f.shape",
-                F.col("i_path").alias("pred"),
-                F.col("t.subj").alias("obj_value"),
-                subj_kind(F.col("t.subj")).alias("obj_kind"),
-                F.lit(None).cast("string").alias("obj_datatype"),
-                F.lit(None).cast("string").alias("obj_lang"),
+                "c.focus_node", "c.shape", "c.pred",
+                *[c.alias(n) for c, n in zip(land, _PATH_VALUE_COLS)],
             )
         )
 
-    if inv_rows:
-        frames.append(_inverse_hop_frame(inv_rows).distinct())
+    closures: dict[str, DataFrame] = {}
 
-    def _forward_hop_frame(spec_rows, schema):
-        """focus⋈triples forward hop gated by a broadcast (shape, path,
-        pred) spec — shared by alternative and the zero-or-one one-step."""
-        spec = F.broadcast(spark.createDataFrame(spec_rows, schema))
-        return (
-            focus.alias("f")
-            .join(
-                triples.alias("t"),
-                (F.col("f.doc_id") == F.col("t.doc_id"))
-                & (F.col("f.focus_node") == F.col("t.subj")),
-            )
-            .join(
-                spec,
-                (F.col("f.shape") == F.col("s_shape"))
-                & (F.col("t.pred") == F.col("s_pred")),
-            )
-            .select(
-                F.col("t.doc_id").alias("doc_id"),
-                "f.focus_node", "f.shape",
-                F.col("s_path").alias("pred"),
-                F.col("t.obj_value").alias("obj_value"),
-                F.col("t.obj_kind").alias("obj_kind"),
-                F.col("t.obj_datatype").alias("obj_datatype"),
-                F.col("t.obj_lang").alias("obj_lang"),
-            )
-        )
-
-    spec_schema = "s_shape string, s_path string, s_pred string"
-    if alt_rows or alt_inv_rows:
-        parts = []
-        if alt_rows:
-            parts.append(_forward_hop_frame(alt_rows, spec_schema))
-        if alt_inv_rows:
-            parts.append(_inverse_hop_frame(alt_inv_rows))
-        frames.append(_union_all(parts).distinct())
-    if zoo_rows:
-        zspec = F.broadcast(spark.createDataFrame(
-            [(s, p) for s, p, _ in zoo_rows], "s_shape string, s_path string"
-        ).distinct())
-        zero_step = (
-            focus.join(zspec, focus.shape == F.col("s_shape"))
-            .select(
-                "doc_id", "focus_node", "shape",
-                F.col("s_path").alias("pred"),
-                F.col("focus_node").alias("obj_value"),
-                subj_kind(F.col("focus_node")).alias("obj_kind"),
-                F.lit(None).cast("string").alias("obj_datatype"),
-                F.lit(None).cast("string").alias("obj_lang"),
-            )
-        )
-        frames.append(
-            zero_step.unionByName(
-                _forward_hop_frame(zoo_rows, spec_schema)
-            ).distinct()
-        )
-    if rec_specs:
-        # recursive paths (p* / p+): per-predicate DIRECTED transitive
-        # closure over the slice pred == p (within-doc edges; docs are
-        # parse-bounded) by the shared path-doubling fixpoint
-        # (runtime.path_closure, also behind SPARQL p+/p*). A focus on a
-        # p-cycle reaches itself, which oneOrMore counts per spec.
-        def _closure(pred: str) -> DataFrame:
+    def closure(pred: str) -> DataFrame:
+        if pred not in closures:
             base = triples.filter(F.col("pred") == pred).select(
                 "doc_id",
                 F.col("subj").alias("src"),
@@ -542,103 +439,39 @@ def _path_value_frames(
                     f"{2 ** runtime.CLOSURE_MAX_ROUNDS}) — refusing to "
                     "under-validate"
                 )
-            return reach
+            closures[pred] = reach.select(
+                "doc_id", F.col("src").alias("subj"), F.lit(pred).alias("pred"),
+                *[F.col(c).alias(n) for c, n in zip(
+                    ("dst", "dst_kind", "dst_dt", "dst_lang"), _PATH_VALUE_COLS
+                )],
+            )
+        return closures[pred]
 
-        closures = {
-            pred: _closure(pred) for pred in sorted(
-                {r[2] for r in rec_specs}
-            )
-        }
-        for shape_iri, path_id, pred, kind in rec_specs:
-            f_sel = focus.filter(F.col("shape") == shape_iri)
-            hop = (
-                f_sel.alias("f")
-                .join(
-                    closures[pred].alias("r"),
-                    (F.col("f.doc_id") == F.col("r.doc_id"))
-                    & (F.col("f.focus_node") == F.col("r.src")),
-                )
-                .select(
-                    F.col("f.doc_id").alias("doc_id"),
-                    "f.focus_node", "f.shape",
-                    F.lit(path_id).alias("pred"),
-                    F.col("r.dst").alias("obj_value"),
-                    F.col("r.dst_kind").alias("obj_kind"),
-                    F.col("r.dst_dt").alias("obj_datatype"),
-                    F.col("r.dst_lang").alias("obj_lang"),
-                )
-            )
-            if kind == "zero_or_more":
-                zero = f_sel.select(
-                    "doc_id", "focus_node", "shape",
-                    F.lit(path_id).alias("pred"),
-                    F.col("focus_node").alias("obj_value"),
-                    subj_kind(F.col("focus_node")).alias("obj_kind"),
-                    F.lit(None).cast("string").alias("obj_datatype"),
-                    F.lit(None).cast("string").alias("obj_lang"),
-                )
-                hop = hop.unionByName(zero)
-            frames.append(hop.distinct())
-    for shape_iri, path_id, preds, dirs in seq_specs:
-        cur = focus.filter(F.col("shape") == shape_iri).select(
-            "doc_id", "focus_node", "shape",
-            F.col("focus_node").alias("node"),
+    frames: list[DataFrame] = []
+    for path_id, (kind, steps, owners) in sorted(paths.items()):
+        zero = focus.filter(F.col("shape").isin(sorted(owners))).select(
+            "doc_id", "focus_node", "shape", F.lit(path_id).alias("pred"),
+            F.col("focus_node").alias("obj_value"),
+            subj_kind(F.col("focus_node")).alias("obj_kind"),
+            null.alias("obj_datatype"), null.alias("obj_lang"),
         )
-        for k, (pred, inv_step) in enumerate(zip(preds, dirs)):
-            last = k == len(preds) - 1
-            if inv_step:
-                # inverse hop (r5 wave 3): walk triples backwards —
-                # current node matches the OBJECT, the step lands on the
-                # subject (never a literal, so kind derives exactly)
-                hop = (
-                    cur.alias("c")
-                    .join(
-                        triples.alias("t"),
-                        (F.col("c.doc_id") == F.col("t.doc_id"))
-                        & (F.col("c.node") == F.col("t.obj_value"))
-                        & (F.col("t.obj_kind") != "literal")
-                        & (F.col("t.pred") == F.lit(pred)),
-                    )
-                )
-                val, kind = F.col("t.subj"), subj_kind(F.col("t.subj"))
-                dt = F.lit(None).cast("string")
-                lang = F.lit(None).cast("string")
-            else:
-                hop = (
-                    cur.alias("c")
-                    .join(
-                        triples.alias("t"),
-                        (F.col("c.doc_id") == F.col("t.doc_id"))
-                        & (F.col("c.node") == F.col("t.subj"))
-                        & (F.col("t.pred") == F.lit(pred)),
-                    )
-                )
-                val, kind = F.col("t.obj_value"), F.col("t.obj_kind")
-                dt, lang = F.col("t.obj_datatype"), F.col("t.obj_lang")
-            if last:
-                cur = hop.select(
-                    F.col("t.doc_id").alias("doc_id"),
-                    "c.focus_node", "c.shape",
-                    F.lit(path_id).alias("pred"),
-                    val.alias("obj_value"),
-                    kind.alias("obj_kind"),
-                    dt.alias("obj_datatype"),
-                    lang.alias("obj_lang"),
-                ).distinct()
-            else:
-                # intermediates must be resources (literals have no
-                # outgoing triples — forward hops filter them; inverse
-                # hops land on subjects, resources by definition);
-                # distinct keeps the diamond fan-out from multiplying
-                # downstream rows
-                if not inv_step:
-                    hop = hop.filter(F.col("t.obj_kind") != "literal")
-                cur = hop.select(
-                    F.col("t.doc_id").alias("doc_id"),
-                    "c.focus_node", "c.shape",
-                    val.alias("node"),
-                ).distinct()
-        frames.append(cur)
+        if kind in ("zero_or_more", "one_or_more"):
+            pred = steps[0][0]
+            vals = hop(zero, [pred], False, closure(pred))
+        elif kind == "alternative":
+            members: dict[bool, list[str]] = {}
+            for pred, inv in steps:
+                members.setdefault(inv, []).append(pred)
+            vals = _union_all(
+                [hop(zero, preds, inv) for inv, preds in members.items()]
+            )
+        else:
+            vals = zero
+            for k, (pred, inv) in enumerate(steps):
+                vals = hop(vals.distinct() if k else vals, [pred], inv)
+        if kind in ("zero_or_one", "zero_or_more"):
+            vals = vals.unionByName(zero)
+        frames.append(vals.distinct())
     return _union_all(frames)
 
 

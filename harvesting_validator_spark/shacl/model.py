@@ -20,12 +20,15 @@ logical components sh:not / sh:and / sh:or / sh:xone (all answered by
 one recursive conformance probe; property-level sh:or of datatypes stays
 the single-scan union), the sh:targetSubjectsOf /
 sh:targetObjectsOf selectors (non-literal focus only), and (r5) the
-property-path expressions sh:inversePath, sequence paths (rdf:lists
-of >=2 IRIs), sh:alternativePath (rdf:list of >=2 IRIs), and
-sh:zeroOrOnePath — compiled to synthetic value-node rows that every
-constraint component then consumes unchanged (compile.py
-_path_value_frames; the recursive forms zeroOrMorePath / oneOrMorePath
-run a per-predicate transitive-closure fixpoint by path doubling),
+property-path expressions sh:inversePath, sequence paths and
+sh:alternativePath (rdf:lists of >=2 steps, each an IRI or
+[sh:inversePath <iri>]), sh:zeroOrOnePath, sh:zeroOrMorePath and
+sh:oneOrMorePath — one evaluator (compile.py _path_value_frames)
+builds every form from three primitives: a hop (one join against the
+triples, forward or inverse), the zero step (the focus node itself)
+and the per-predicate transitive closure (runtime.path_closure, path
+doubling); its synthetic value-node rows feed every constraint
+component unchanged,
 plus (r5) sh:qualifiedValueShapesDisjoint (sibling-conforming values
 excluded from the qualified count — the sibling probes ride the same
 recursive conformance pass), plus (r5) node-shape SPARQL-based
@@ -124,7 +127,12 @@ class PropertyShape:
     # members' values, set semantics); "zero_or_one" = sh:zeroOrOnePath
     # (the focus node itself union the one-hop objects); "zero_or_more"
     # / "one_or_more" = the recursive forms (directed transitive closure
-    # of the predicate, p* including the focus itself). path_preds holds
+    # of the predicate, p* including the focus itself). Evaluation
+    # (compile.py _path_value_frames): inverse, sequence and zero_or_one
+    # are chains of hops; alternative is one forward and/or one inverse
+    # hop over its member sets; the recursive forms hop over the
+    # predicate's closure; zero_or_one / zero_or_more add the zero step
+    # (the focus itself). path_preds holds
     # the underlying predicate IRIs in traversal/member order (empty for
     # "iri", where `path` is the predicate itself); path_dirs (r5 wave 3)
     # holds one flag per step for sequence/alternative members — True =

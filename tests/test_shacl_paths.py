@@ -678,3 +678,142 @@ _:l rdf:first ex:p1 ; rdf:rest _:l .
     )
     with pytest.raises(NotImplementedError, match="no\\s+rdf:rest"):
         parse_shapes_turtle(norest)
+
+
+# --- one evaluator for every path kind (shacl/compile.py
+# _path_value_frames: hop, zero step, closure)
+
+ALL_KINDS_PROFILE = """
+@prefix sh: <http://www.w3.org/ns/shacl#> .
+@prefix ex: <http://example.com/ns#> .
+
+ex:S a sh:NodeShape ; sh:targetClass ex:T ;
+  sh:property [ sh:path ex:name ; sh:maxCount 9 ] ;
+  sh:property [ sh:path [ sh:inversePath ex:knows ] ; sh:maxCount 9 ] ;
+  sh:property [ sh:path ( ex:worksFor [ sh:inversePath ex:worksFor ] ) ;
+                sh:maxCount 9 ] ;
+  sh:property [ sh:path [ sh:alternativePath
+                          ( ex:email [ sh:inversePath ex:mentor ] ) ] ;
+                sh:maxCount 9 ] ;
+  sh:property [ sh:path [ sh:zeroOrOnePath ex:spouse ] ; sh:maxCount 9 ] ;
+  sh:property [ sh:path [ sh:zeroOrMorePath ex:broader ] ; sh:maxCount 9 ] ;
+  sh:property [ sh:path [ sh:oneOrMorePath ex:broader ] ; sh:maxCount 9 ] .
+"""
+
+
+def test_every_path_kind_on_one_document(spark):
+    from harvesting_validator_spark.shacl.compile import (
+        _path_value_frames,
+        compute_focus,
+    )
+
+    f = EX + "f"
+    triples = [
+        _t(f, RDF_TYPE, EX + "T", kind="iri"),
+        _t(f, EX + "name", "F"),
+        # ^knows lands on subjects; the subject-derived kind tells a
+        # blank node apart; a literal object spelling the focus IRI is
+        # not the focus
+        _t(EX + "k1", EX + "knows", f, kind="iri"),
+        _t("_:k2", EX + "knows", f, kind="bnode"),
+        _t(EX + "g", EX + "knows", f),
+        # worksFor/^worksFor: the focus and its coworker; the literal
+        # employer is never stepped from, so x (working at the IRI the
+        # literal spells) is not a value
+        _t(f, EX + "worksFor", EX + "c", kind="iri"),
+        _t(EX + "e2", EX + "worksFor", EX + "c", kind="iri"),
+        _t(f, EX + "worksFor", EX + "lc"),
+        _t(EX + "x", EX + "worksFor", EX + "lc", kind="iri"),
+        # email|^mentor: one forward literal, one inverse member
+        _t(f, EX + "email", "f@example.com"),
+        _t(EX + "m", EX + "mentor", f, kind="iri"),
+        # spouse?: the focus itself and its spouse
+        _t(f, EX + "spouse", EX + "s", kind="iri"),
+        # broader* / broader+: a chain ending in a literal leaf
+        _t(f, EX + "broader", EX + "b1", kind="iri"),
+        _t(EX + "b1", EX + "broader", EX + "b2", kind="iri"),
+        _t(EX + "b2", EX + "broader", "top"),
+    ]
+    df = spark.createDataFrame(
+        [("d", t.subj, t.pred, t.obj_value, t.obj_kind, t.obj_datatype,
+          t.obj_lang) for t in triples],
+        "doc_id string, subj string, pred string, obj_value string, "
+        "obj_kind string, obj_datatype string, obj_lang string",
+    )
+    shapes = parse_shapes_turtle(ALL_KINDS_PROFILE)
+    frames = _path_value_frames(
+        compute_focus(df, shapes, spark), df, shapes, spark
+    )
+    got = {
+        (r.focus_node, r.pred, r.obj_value, r.obj_kind)
+        for r in frames.collect()
+    }
+
+    def rows(path_id, *values):
+        return {(f, path_id, v, k) for v, k in values}
+
+    want = (
+        rows("^" + EX + "knows", (EX + "k1", "iri"), ("_:k2", "bnode"))
+        | rows(EX + "worksFor/^" + EX + "worksFor",
+               (f, "iri"), (EX + "e2", "iri"))
+        | rows(EX + "email|^" + EX + "mentor",
+               ("f@example.com", "literal"), (EX + "m", "iri"))
+        | rows(EX + "spouse?", (f, "iri"), (EX + "s", "iri"))
+        | rows(EX + "broader*", (f, "iri"), (EX + "b1", "iri"),
+               (EX + "b2", "iri"), ("top", "literal"))
+        | rows(EX + "broader+", (EX + "b1", "iri"), (EX + "b2", "iri"),
+               ("top", "literal"))
+    )
+    # the plain IRI path rides ftrip, not the synthetic path rows
+    assert got == want
+    # rows are distinct: no value counted twice
+    assert frames.count() == len(want)
+
+
+@pytest.mark.parametrize("which,max_joins,n_rows", [
+    ("path", 6, 190),
+    ("recursive", 7, 390),
+])
+def test_path_plan_join_count(spark, which, max_joins, n_rows):
+    # every hop is ONE join against triples and every path kind is built
+    # from the same hop, so the plan never grows past the per-kind
+    # branches it replaced (6 joins for PATH_PROFILE, 7 for
+    # REC_PATH_PROFILE at 60 documents)
+    import re
+
+    from harvesting_validator_spark.plans.pipeline import add_doc_id
+    from harvesting_validator_spark.runtime import (
+        persistent_rdd_ids,
+        release_new_rdds,
+    )
+    from harvesting_validator_spark.shacl.compile import (
+        _path_value_frames,
+        compute_focus,
+    )
+    from harvesting_validator_spark.sources.rdf_parse import (
+        parse_sources_to_triples,
+    )
+    from harvesting_validator_spark.sources.synthetic import (
+        PATH_PROFILE,
+        REC_PATH_PROFILE,
+        generate_path_sources,
+        generate_recursive_path_sources,
+    )
+
+    generate, profile = {
+        "path": (generate_path_sources, PATH_PROFILE),
+        "recursive": (generate_recursive_path_sources, REC_PATH_PROFILE),
+    }[which]
+    before = persistent_rdd_ids(spark)
+    try:
+        shapes = parse_shapes_turtle(profile)
+        triples = parse_sources_to_triples(add_doc_id(generate(spark, 60)))
+        # a persisted focus keeps compute_focus's own join out of the count
+        focus = compute_focus(triples, shapes, spark).persist()
+        frames = _path_value_frames(focus, triples, shapes, spark)
+        plan = frames._jdf.queryExecution().optimizedPlan().toString()
+        joins = len(re.findall(r"(?m)^[\s:+\-]*Join ", plan))
+        assert 0 < joins <= max_joins, plan
+        assert frames.count() == n_rows
+    finally:
+        release_new_rdds(spark, before, blocking=True)
