@@ -6,10 +6,14 @@ Stages, all DataFrame-native:
 
 1. ``extract_mentions`` — pivot each typed subject's literal attributes
    into one row per (doc_id, entity IRI): the "mention".
-2. ``block_candidates`` — minhash over the mention's attribute token set,
-   banded; candidate pairs = entities sharing a band. The band join is the
-   only shuffle; hot bands (stopword-heavy mentions) are split by AQE
+2. ``block_candidates`` — ``lsh.lsh_pairs`` over the mentions keyed by
+   entity: minhash of the attribute token set, banded; candidate pairs =
+   entities sharing a band, each emitted once at its first shared band.
+   The band join carries entity ids only and the mention payload attaches
+   after it; hot bands (stopword-heavy mentions) are split by AQE
    skew-join handling, and the band key can be salted via ``n_salt``.
+   ``block_candidates_by_key`` (exact strong-key blocking) attaches the
+   payload the same way.
 3. ``score_pairs`` — pure-Catalyst token-Jaccard + strong-key agreement
    (array_intersect/array_union/arrays_overlap inside whole-stage
    codegen; no Python anywhere in the hot path).
@@ -26,10 +30,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
+from harvesting_validator_spark.lsh import attach, lsh_pairs, minhash
 
-N_HASHES = 8
-N_BANDS = 4
+RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
 
 
 def extract_mentions(
@@ -74,84 +77,26 @@ def extract_mentions(
     )
 
 
-def _minhash_bands(col_tokens) -> "F.Column":
-    """Array of N_BANDS (band_id, band_hash) structs from a token array."""
-
-    def mh(s: int):
-        prefix = f"{s}:"
-        return F.array_min(
-            F.transform(
-                col_tokens,
-                lambda t: F.conv(
-                    F.substring(F.md5(F.concat(F.lit(prefix), t)), 1, 8), 16, 10
-                ).cast("bigint"),
-            )
-        )
-
-    sig = [mh(s) for s in range(N_HASHES)]
-    rows_per_band = N_HASHES // N_BANDS
-    return F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band_id"),
-                F.md5(
-                    F.concat_ws(
-                        "_",
-                        *sig[b * rows_per_band : (b + 1) * rows_per_band],
-                    )
-                ).alias("band_hash"),
-            )
-            for b in range(N_BANDS)
-        ]
+def _candidates(pairs: DataFrame) -> DataFrame:
+    """The candidate columns both blockers emit, read off mention rows
+    attached by entity (``lsh.attach``) as ``a`` and ``b``."""
+    return pairs.select(
+        F.col("a.entity").alias("entity_a"),
+        F.col("b.entity").alias("entity_b"),
+        F.col("a.attr_text").alias("text_a"),
+        F.col("b.attr_text").alias("text_b"),
+        F.col("a.strong_keys").alias("keys_a"),
+        F.col("b.strong_keys").alias("keys_b"),
     )
 
 
 def block_candidates(mentions: DataFrame, n_salt: int = 1) -> DataFrame:
-    """LSH blocking: entities sharing any minhash band of their attribute
-    token set. Self-join keyed (band_id, band_hash[, salt]); returns
-    distinct candidate pairs with both attribute bundles attached.
-
-    ``n_salt > 1`` splits hot bands: each left row is replicated into one
-    salt bucket only, each right row into all of them, so a band with B
-    members costs B*n_salt rows instead of a single B^2 partition."""
+    """LSH blocking: entity pairs sharing any minhash band of their
+    attribute token set (``lsh.lsh_pairs``, ``n_salt`` splits hot bands),
+    each once, with both attribute bundles attached."""
     toks = F.array_distinct(F.split(F.col("attr_text"), " "))
-    m = mentions.select(
-        "doc_id", "entity", "attr_text", "strong_keys",
-        F.explode(_minhash_bands(toks)).alias("band"),
-    ).select(
-        "doc_id", "entity", "attr_text", "strong_keys",
-        "band.band_id", "band.band_hash",
-    )
-
-    if n_salt > 1:
-        left = m.withColumn(
-            "salt", F.pmod(F.xxhash64("entity"), F.lit(n_salt))
-        )
-        right = m.withColumn(
-            "salt", F.explode(F.sequence(F.lit(0), F.lit(n_salt - 1)))
-        )
-        key = ["band_id", "band_hash", "salt"]
-    else:
-        left, right, key = m, m, ["band_id", "band_hash"]
-
-    a = left.alias("a")
-    b = right.alias("b")
-    cond = F.lit(True)
-    for k in key:
-        cond = cond & (F.col(f"a.{k}") == F.col(f"b.{k}"))
-    cond = cond & (F.col("a.entity") < F.col("b.entity"))
-    return (
-        a.join(b, cond)
-        .select(
-            F.col("a.entity").alias("entity_a"),
-            F.col("b.entity").alias("entity_b"),
-            F.col("a.attr_text").alias("text_a"),
-            F.col("b.attr_text").alias("text_b"),
-            F.col("a.strong_keys").alias("keys_a"),
-            F.col("b.strong_keys").alias("keys_b"),
-        )
-        .dropDuplicates(["entity_a", "entity_b"])
-    )
+    rows = mentions.select("entity", "attr_text", "strong_keys", *minhash(toks))
+    return _candidates(lsh_pairs(rows, "entity", n_salt=n_salt))
 
 
 def block_candidates_by_key(mentions: DataFrame) -> DataFrame:
@@ -159,30 +104,23 @@ def block_candidates_by_key(mentions: DataFrame) -> DataFrame:
     sharing ANY strong key (ssn-like). Deterministic and recall-complete
     for key-bearing entities — the standard first blocking pass in record
     linkage; minhash blocking (block_candidates) covers keyless mentions.
+    The key join carries entity ids only; pairs sharing several keys are
+    deduplicated as id pairs before the mention payload attaches.
     Shuffle is keyed by the strong key; a pathological hot key (one value
     shared by millions of entities) is the classic skew case — AQE
     skew-join splitting plus an upstream frequency cap handle it."""
-    keyed = mentions.select(
-        "doc_id", "entity", "attr_text", "strong_keys",
-        F.explode("strong_keys").alias("key"),
-    )
+    keyed = mentions.select("entity", F.explode("strong_keys").alias("key"))
     a, b = keyed.alias("a"), keyed.alias("b")
-    return (
+    pairs = (
         a.join(
             b,
             (F.col("a.key") == F.col("b.key"))
             & (F.col("a.entity") < F.col("b.entity")),
         )
-        .select(
-            F.col("a.entity").alias("entity_a"),
-            F.col("b.entity").alias("entity_b"),
-            F.col("a.attr_text").alias("text_a"),
-            F.col("b.attr_text").alias("text_b"),
-            F.col("a.strong_keys").alias("keys_a"),
-            F.col("b.strong_keys").alias("keys_b"),
-        )
-        .dropDuplicates(["entity_a", "entity_b"])
+        .select(F.col("a.entity").alias("id_a"), F.col("b.entity").alias("id_b"))
+        .dropDuplicates()
     )
+    return _candidates(attach(pairs, mentions, "entity"))
 
 
 def score_pairs(candidates: DataFrame) -> DataFrame:

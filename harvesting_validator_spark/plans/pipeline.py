@@ -121,12 +121,15 @@ def run_kg_construction(
     Arrow-batched link scoring -> union-find canonicalization ->
     deduplicated (subj, pred, obj) canonical graph.
 
-    blocking: 'minhash' (LSH bands over the attribute token set) or 'key'
-    (exact blocking on strong identifying keys). Choose 'key' when strong
-    keys exist — minhash banding over LOW-ENTROPY attribute text (short
-    bundles sharing most tokens across distinct entities) degenerates
-    toward quadratic candidates; shingling longer text or raising the
-    rows-per-band restores selectivity when no keys are available."""
+    blocking: 'minhash' (``lsh.lsh_pairs`` over the attribute token set:
+    an entity-id band join, each pair emitted once, ``n_salt`` splitting
+    hot bands) or 'key' (exact blocking on strong identifying keys; n_salt
+    unused). Both attach the mention payload by entity after their join.
+    Choose 'key' when strong keys exist — minhash banding over LOW-ENTROPY
+    attribute text (short bundles sharing most tokens across distinct
+    entities) degenerates toward quadratic candidates; shingling longer
+    text or raising the rows-per-band restores selectivity when no keys
+    are available."""
     from harvesting_validator_spark.kg.canonicalize import canonical_mapping
     from harvesting_validator_spark.kg.graph import dedup_graph, rewrite_to_canonical
     from harvesting_validator_spark.kg.linking import (

@@ -1,11 +1,18 @@
-"""Deduplication operators for the training-data pipeline (task brief):
-exact hash-dedup, MinHash+LSH candidate generation, SimHash, and n-gram
-Jaccard — each over the `documents` table with an exact DuckDB oracle.
+"""Deduplication operators over the `documents` table — exact hash-dedup,
+MinHash+LSH candidate generation and verification, SimHash, n-gram
+Jaccard, embedding-cosine and incremental novelty — each with an exact
+DuckDB oracle.
 
-Scale notes: signatures (minhash / simhash / fingerprints) are computed
-columnar with array transforms over the tokenized text — zero shuffles and
-no Python. Only the LSH band self-join shuffles, keyed (band_id,
-band_hash); hot bands are exactly what AQE skew-join splitting handles
+Minhash signatures, band rows and the band self-join come from
+``harvesting_validator_spark.lsh``, the one LSH operator that KG entity
+linking uses too; this module adds the document-side inputs (signatures
+per doc, or per token-set class in lsh_verified_pairs) and the verify
+step. The DuckDB SQL here (_MH_SQL, _BAND_SQL with its md5 band hashes)
+is the independent reference.
+
+Scale notes: signatures are columnar array transforms — zero shuffles,
+no Python. Only the LSH band self-join shuffles, and it carries ids and
+band values only; hot bands are what AQE skew-join splitting handles
 (session.py). At 100 TB the brute-force Jaccard pair scan is replaced by
 the LSH candidates (minhash_lsh_pairs) + verify-on-candidates
 (lsh_verified_pairs).
@@ -15,10 +22,14 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from harvesting_validator_spark.lsh import (
+    N_BANDS,
+    N_HASHES,
+    band_rows,
+    lsh_pairs,
+    minhash,
+)
 from harvesting_validator_spark.queries.common import dround, md5_int, tbl, tokens
-
-N_HASHES = 8
-N_BANDS = 4  # 2 rows per band
 
 
 # --- exact dedup: hash-groupBy ---------------------------------------------------
@@ -37,32 +48,7 @@ FROM documents GROUP BY sha256(text)
 """
 
 
-# --- minhash signatures (columnar, shuffle-free) ---------------------------------
-def _mh_over(toks, s: int):
-    """mh_s over an arbitrary token-array column: min over tokens of
-    md5int(s:tok). ONE definition shared by the doc-level signatures and
-    the r6 class-level signatures — the two MUST stay hash-consistent
-    for the class rewrite's equivalence to hold, so the formula lives in
-    exactly one place.
-
-    NB: constants must be closed over via a factory — a two-argument
-    lambda passed to F.transform is interpreted as (element, index)."""
-    prefix = f"{s}:"
-    return F.array_min(
-        F.transform(
-            toks,
-            lambda t: F.conv(
-                F.substring(F.md5(F.concat(F.lit(prefix), t)), 1, 8), 16, 10
-            ).cast("bigint"),
-        )
-    ).alias(f"mh{s}")
-
-
-def _minhash_cols():
-    toks = F.array_distinct(tokens())
-    return [_mh_over(toks, s) for s in range(N_HASHES)]
-
-
+# --- minhash signatures (columnar, shuffle-free; lsh.minhash) ----------------
 _MH_SQL = ",\n       ".join(
     f"list_min(list_transform(list_distinct(string_split(text, ' ')), "
     f"t -> ('0x' || substr(md5('{s}:' || t), 1, 8))::BIGINT)) AS mh{s}"
@@ -72,28 +58,10 @@ _MH_SQL = ",\n       ".join(
 
 def q_minhash_signatures(spark, sf_dir):
     d = tbl(spark, sf_dir, "documents")
-    return d.select("doc_id", *_minhash_cols())
+    return d.select("doc_id", *minhash(F.array_distinct(tokens())))
 
 
 O_MINHASH = f"SELECT doc_id,\n       {_MH_SQL}\nFROM documents"
-
-
-def _band_table(spark, sf_dir):
-    sig = q_minhash_signatures(spark, sf_dir)
-    bands = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band_id"),
-                F.md5(
-                    F.concat_ws("_", F.col(f"mh{2 * b}"), F.col(f"mh{2 * b + 1}"))
-                ).alias("band_hash"),
-            )
-            for b in range(N_BANDS)
-        ]
-    )
-    return sig.select("doc_id", F.explode(bands).alias("band")).select(
-        "doc_id", "band.band_id", "band.band_hash"
-    )
 
 
 _BAND_SQL = f"""
@@ -110,75 +78,26 @@ bands AS (
 # --- LSH candidate pairs: band self-join ------------------------------------------
 def q_minhash_lsh_pairs(spark, sf_dir):
     """Docs sharing >=1 of the 4 (2-row) minhash bands — the blocking step
-    of web-scale near-dedup (SURVEY §2.3 similarity join).
+    of web-scale near-dedup (SURVEY §2.3 similarity join), as
+    ``lsh.lsh_pairs`` over the signature table.
 
     Exactly-once pairs WITHOUT a distinct: on a near-dup-dense corpus a
     pair collides in ~4 bands, so the r2 shape (join -> 40M raw pair rows
     at sf0.1 -> .distinct()) paid a full exchange + hash dedup on the
     quadratic pair stream — the single most expensive shuffle in the
-    bench suite (measured: candidates 21.8s of lsh_verified_pairs' 21.4s
-    total). Instead each row carries its doc's full signature and a pair
-    is EMITTED ONLY AT ITS FIRST SHARED BAND (no earlier band has equal
-    hashes) — a map-side filter, identical pair set, zero pair-stream
-    shuffle (measured 21.8s -> 4.6s). The join keys are the raw minhash
-    bigint pairs rather than md5(concat) strings: same equality (md5 is
-    collision-free on these 16-byte inputs), narrower exchange."""
-    sig = q_minhash_signatures(spark, sf_dir)
-    # parallelism guard: with the pair-dedup shuffle gone, the whole
-    # candidates(+verify) pipeline fuses into the stage that SCANS the
-    # documents parquet — one small file at bench sf = 1-4 splits, so the
-    # quadratic pair work ran near-serial (measured 39-47s). Spreading
-    # the tiny signature table (1 row/doc) across default parallelism
-    # restores full-width probing for ~nothing; at corpus scale the scan
-    # already has >= that many splits and this no-ops (r6: the inline
-    # sizing logic moved to the shared spread_scan helper, which also
-    # fails CLOSED when the size probe errors)
+    bench suite. lsh_pairs emits a pair only at its first shared band, a
+    map-side filter: identical pair set, zero pair-stream shuffle."""
     from harvesting_validator_spark.queries.common import spread_scan
 
-    sig = spread_scan(spark, sf_dir, "documents", sig)
-    # one row per (doc, band) carrying the FULL signature: the first-band
-    # test below is then plain unrolled bigint comparisons that stay
-    # inside whole-stage codegen (a slice/zip_with/exists formulation of
-    # the same test is an interpreted higher-order function per joined
-    # row — measured 73s on the same input)
-    def pick(side: str, parity: int):
-        # this band's own hash row: CASE band_id WHEN b THEN mh{2b+parity}
-        c = F.lit(None).cast("bigint")
-        for bp in range(N_BANDS):
-            c = F.when(
-                F.col(f"{side}band_id") == bp,
-                F.col(f"{side}mh{2 * bp + parity}"),
-            ).otherwise(c)
-        return c
-
-    e = sig.select(
-        "doc_id",
-        *[F.col(f"mh{i}") for i in range(N_HASHES)],
-        F.explode(
-            F.array(*[F.lit(b) for b in range(N_BANDS)])
-        ).alias("band_id"),
-    ).withColumn("bh1", pick("", 0)).withColumn("bh2", pick("", 1))
-    a, b = e.alias("a"), e.alias("b")
-
-    def band_eq(bp: int):
-        return (
-            F.col(f"a.mh{2 * bp}") == F.col(f"b.mh{2 * bp}")
-        ) & (F.col(f"a.mh{2 * bp + 1}") == F.col(f"b.mh{2 * bp + 1}"))
-
-    earlier_shared = F.lit(False)
-    for bp in range(N_BANDS - 1):
-        earlier_shared = earlier_shared | (
-            (F.col("a.band_id") > bp) & band_eq(bp)
-        )
-    joined = a.join(
-        b,
-        (F.col("a.band_id") == F.col("b.band_id"))
-        & (F.col("a.bh1") == F.col("b.bh1"))
-        & (F.col("a.bh2") == F.col("b.bh2"))
-        & (F.col("a.doc_id") < F.col("b.doc_id")),
-    )
-    return joined.filter(~earlier_shared).select(
-        F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
+    # parallelism guard: with no pair-dedup shuffle, the whole pipeline
+    # fuses into the stage that SCANS the documents parquet — one small
+    # file at bench sf = 1-4 splits, so the quadratic pair work ran
+    # near-serial. Spreading the tiny signature table (1 row/doc) across
+    # default parallelism restores full-width probing; at corpus scale
+    # the scan already has enough splits and spread_scan no-ops
+    sig = spread_scan(spark, sf_dir, "documents", q_minhash_signatures(spark, sf_dir))
+    return lsh_pairs(sig, "doc_id").select(
+        F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b")
     )
 
 
@@ -198,7 +117,7 @@ def q_simhash(spark, sf_dir):
     toks = F.array_distinct(tokens())
 
     def bit_sum(b: int):
-        # closure factory: see _minhash_cols note on F.transform lambdas
+        # closure factory: see lsh._mh on F.transform lambdas
         return F.aggregate(
             F.transform(
                 toks,
@@ -293,6 +212,17 @@ _LSH_VOCAB_WORDS_MAX = 4
 _LSH_CLS_CACHE: list = []
 
 
+def _doc_token_sets(spark, sf_dir):
+    d = tbl(spark, sf_dir, "documents")
+    return d.select("doc_id", F.array_sort(F.array_distinct(tokens())).alias("ts"))
+
+
+def _class_ids(docs):
+    # one row per token set; class_id = its min doc_id. A groupBy keeps
+    # map-side partial aggregation, so a hot class costs no task its size
+    return docs.groupBy("ts").agg(F.min("doc_id").alias("class_id"))
+
+
 def _token_classes(spark, sf_dir):
     """Token-set equivalence classes of the documents corpus (r6, guide
     §2.3/§8: decide on lightweight proxies, expand to heavy rows last).
@@ -302,25 +232,23 @@ def _token_classes(spark, sf_dir):
     so blocking + verification is a function of the class pair, not the
     doc pair. On the bench corpus this cuts raw band collisions 3x
     (2.33G -> 0.78G at sf1.0) and Jaccard evaluations ~2.2x, and lets the
-    >=0.7 filter run BEFORE the doc-pair expansion. One 1-row-per-doc
-    shuffle (the groupBy) replaces nothing — the old plan had none — but
-    every downstream cost now scales with |classes|, not |docs|."""
-    d = tbl(spark, sf_dir, "documents")
-    ts = F.array_sort(F.array_distinct(tokens()))
-    cls = (
-        d.select("doc_id", ts.alias("ts"))
-        .groupBy("ts")
-        .agg(
-            F.min("doc_id").alias("class_id"),
-            F.collect_list("doc_id").alias("members"),
-        )
-    )
-
+    >=0.7 filter run BEFORE the doc-pair expansion. Members are not
+    collected: ``_class_members`` joins them back."""
+    cls = _class_ids(_doc_token_sets(spark, sf_dir))
     ti = F.array_distinct(F.transform(F.col("ts"), md5_int))
     return cls.select(
-        "class_id", "members", ti.alias("ti"),
-        *[_mh_over(F.col("ts"), s) for s in range(N_HASHES)],
+        "class_id", ti.alias("ti"), *minhash(F.col("ts"))
     ).withColumn("n_toks", F.size("ti"))
+
+
+def _class_members(spark, sf_dir):
+    """The ``(class_id, doc_id)`` membership table: each doc joined to its
+    class by token set — one row per doc, no per-class array. Built from
+    the scan, not from the persisted class table: AQE reuses no exchange
+    above a cached-table stage, so a cached leaf here would build this
+    table once per expansion join instead of once."""
+    docs = _doc_token_sets(spark, sf_dir)
+    return docs.join(_class_ids(docs), "ts").select("class_id", "doc_id")
 
 
 def _bitmap_vocab(cls, n_classes: int | None = None):
@@ -390,20 +318,24 @@ def q_lsh_verified_pairs(spark, sf_dir):
        collisions behave identically to the oracle's int-set semantics.
        Larger vocabularies keep the array_intersect fallback on the
        class-level plan (still ~3x fewer intersects than r5).
-    3. The band self-join carries only (class_id, band_id, bh1, bh2) —
-       slim enough that statistics/AQE keep it broadcast at bench sf
-       (never forced: at 10^12-doc scale it degrades to a shuffled join,
-       guarded by tests/test_plans.py). Class metadata and member lists
-       attach by class_id AFTER the join. `<=` on class_id emits the
+    3. Blocking is ``lsh.lsh_pairs`` over the class table: the band
+       self-join carries only (class_id, band_id, bh1, bh2) — slim enough
+       that statistics/AQE keep it broadcast at bench sf (never forced:
+       at 10^12-doc scale it degrades to a shuffled join, guarded by
+       tests/test_plans.py) — and class metadata attaches by class_id
+       AFTER the join. ``self_pairs`` (`<=` on class_id) emits the
        diagonal (intra-class) pairs through the same pipeline — band 0
        survives the first-shared-band filter, Jaccard reduces to n/n =
        1.0 — avoiding a Union branch (a union above this pipeline
        measured 7x slower than the fused single pipeline: the count no
        longer fuses into the probe stage).
     4. The >=0.7 filter runs on class pairs BEFORE expansion; only
-       passing pairs explode member x member into doc pairs (the
-       (ca != cb) | (da < db) filter orders diagonal pairs exactly
-       once; singleton diagonals vanish there).
+       passing pairs expand to doc pairs, by joining the (class_id,
+       doc_id) membership table (_class_members) once per side. No
+       per-class member array is built, so a hot class is ordinary join
+       rows that AQE skew handling can split. The (ca != cb) | (da < db)
+       filter orders diagonal pairs exactly once; singleton diagonals
+       vanish there.
 
     The class table is persisted (it feeds 7 plan branches; InMemory
     stats also give AQE true sizes for the broadcast decisions); the
@@ -435,60 +367,23 @@ def q_lsh_verified_pairs(spark, sf_dir):
         n_words = 0
         verify_cols = ["ti"]
 
-    bands = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band_id"),
-                F.col(f"mh{2 * b}").alias("bh1"),
-                F.col(f"mh{2 * b + 1}").alias("bh2"),
-            )
-            for b in range(N_BANDS)
-        ]
+    rows = cls.select(
+        "class_id", "n_toks", *verify_cols, *[f"mh{i}" for i in range(N_HASHES)]
     )
-    e = cls.select("class_id", F.explode(bands).alias("band")).select(
-        "class_id", "band.band_id", "band.bh1", "band.bh2"
-    )
-    a, b = e.alias("a"), e.alias("b")
-    raw = a.join(
-        b,
-        (F.col("a.band_id") == F.col("b.band_id"))
-        & (F.col("a.bh1") == F.col("b.bh1"))
-        & (F.col("a.bh2") == F.col("b.bh2"))
-        & (F.col("a.class_id") <= F.col("b.class_id")),
-    ).select(
-        F.col("a.class_id").alias("ca"),
-        F.col("b.class_id").alias("cb"),
-        F.col("a.band_id").alias("band_id"),
-    )
-
-    meta = cls.select(
-        "class_id", "n_toks", *verify_cols,
-        *[f"mh{i}" for i in range(2 * (N_BANDS - 1))],
-    )
-    j = raw.join(meta.alias("ma"), F.col("ca") == F.col("ma.class_id")).join(
-        meta.alias("mb"), F.col("cb") == F.col("mb.class_id")
-    )
-    earlier = F.lit(False)
-    for bp in range(N_BANDS - 1):
-        earlier = earlier | (
-            (F.col("band_id") > bp)
-            & (F.col(f"ma.mh{2 * bp}") == F.col(f"mb.mh{2 * bp}"))
-            & (F.col(f"ma.mh{2 * bp + 1}") == F.col(f"mb.mh{2 * bp + 1}"))
-        )
-    j = j.filter(~earlier)
+    j = lsh_pairs(rows, "class_id", self_pairs=True)
     if n_words:
         inter = sum(
             (
-                F.bit_count(F.col(f"ma.w{w}").bitwiseAND(F.col(f"mb.w{w}")))
+                F.bit_count(F.col(f"a.w{w}").bitwiseAND(F.col(f"b.w{w}")))
                 for w in range(n_words)
             ),
             F.lit(0),
         ).cast("bigint")
     else:
-        inter = F.size(F.array_intersect(F.col("ma.ti"), F.col("mb.ti"))).cast(
+        inter = F.size(F.array_intersect(F.col("a.ti"), F.col("b.ti"))).cast(
             "bigint"
         )
-    uni = F.col("ma.n_toks") + F.col("mb.n_toks") - inter
+    uni = F.col("a.n_toks") + F.col("b.n_toks") - inter
     jac = dround(inter.cast("double") / uni, 6)
     if n_words:
         # integer-exact >= 0.7 pre-filter (bitmap path only): Spark's
@@ -504,32 +399,23 @@ def q_lsh_verified_pairs(spark, sf_dir):
         # NULLs (absent masks) drop under both predicates. The
         # array_intersect fallback keeps the plain rounded filter (u is
         # unbounded there).
-        keep = (inter * F.lit(10_000_000).cast("bigint")) >= (
-            F.lit(6_999_995).cast("bigint") * uni
+        j = j.filter(
+            (inter * F.lit(10_000_000).cast("bigint"))
+            >= (F.lit(6_999_995).cast("bigint") * uni)
         )
-        cp = j.filter(keep).select("ca", "cb", jac.alias("jaccard")).filter(
-            F.col("jaccard") >= 0.7
-        )
-    else:
-        cp = j.select("ca", "cb", jac.alias("jaccard")).filter(
-            F.col("jaccard") >= 0.7
-        )
+    cp = j.select(
+        F.col("id_a").alias("ca"), F.col("id_b").alias("cb"), jac.alias("jaccard")
+    ).filter(F.col("jaccard") >= 0.7)
 
-    mem = cls.select("class_id", "members")
+    mem = _class_members(spark, sf_dir)
+    da, db = F.col("xa.doc_id"), F.col("xb.doc_id")
     return (
         cp.join(mem.alias("xa"), F.col("ca") == F.col("xa.class_id"))
         .join(mem.alias("xb"), F.col("cb") == F.col("xb.class_id"))
+        .filter((F.col("ca") != F.col("cb")) | (da < db))
         .select(
-            "ca", "cb",
-            F.explode(F.col("xa.members")).alias("da"),
-            F.col("xb.members").alias("mbs"),
-            "jaccard",
-        )
-        .select("ca", "cb", "da", F.explode("mbs").alias("db"), "jaccard")
-        .filter((F.col("ca") != F.col("cb")) | (F.col("da") < F.col("db")))
-        .select(
-            F.least("da", "db").alias("doc_a"),
-            F.greatest("da", "db").alias("doc_b"),
+            F.least(da, db).alias("doc_a"),
+            F.greatest(da, db).alias("doc_b"),
             "jaccard",
         )
     )
@@ -677,22 +563,23 @@ QUALIFY row_number() OVER (PARTITION BY bucket ORDER BY cos DESC, vec_a, vec_b) 
 def q_dedup_incremental_novel(spark, sf_dir):
     """Dedup a NEW crawl batch against the EXISTING corpus index without
     ever forming doc-doc pairs: the index is the distinct (band_id,
-    band_hash) set of already-ingested docs (here: doc_id % 10 != 0
+    bh1, bh2) set (``lsh.band_rows``) of already-ingested docs (here: doc_id % 10 != 0
     stands in for the corpus, % 10 == 0 for the new batch); each batch
     doc probes its own bands with a left join and is novel iff NO band
     hits. This is the steady-state shape of corpus-scale dedup — the
     index is an append-only band table, the per-batch cost is
     |batch| × bands probes (one keyed equi-join), never the quadratic
     candidate stream a full self-join re-pays every ingest."""
-    bands = _band_table(spark, sf_dir)
+    bands = band_rows(q_minhash_signatures(spark, sf_dir), "doc_id")
+    key = ["band_id", "bh1", "bh2"]
     idx = (
         bands.filter(F.col("doc_id") % 10 != 0)
-        .select("band_id", "band_hash")
+        .select(*key)
         .distinct()
         .withColumn("hit", F.lit(1))
     )
     batch = bands.filter(F.col("doc_id") % 10 == 0)
-    joined = batch.join(idx, ["band_id", "band_hash"], "left")
+    joined = batch.join(idx, key, "left")
     return joined.groupBy("doc_id").agg(
         F.sum(F.coalesce(F.col("hit"), F.lit(0))).cast("bigint").alias(
             "n_hit_bands"

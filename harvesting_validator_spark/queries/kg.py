@@ -294,10 +294,11 @@ def _kg_run(spark, sf_dir):
         # per the run_kg_construction selection rule: minhash banding over
         # its LOW-ENTROPY attribute text (4 of ~6 tokens shared by every
         # doc) degenerates toward quadratic candidates (measured 7.37M
-        # candidate pairs for 22.5k true pairs at 5k docs). The LSH
-        # blocking operator itself is exercised (and benched) on the
-        # high-entropy documents corpus via minhash_lsh_pairs /
-        # lsh_verified_pairs.
+        # candidate pairs for 22.5k true pairs at 5k docs). The shared
+        # LSH operator behind minhash blocking (lsh.lsh_pairs) is
+        # exercised and benched on the high-entropy documents corpus via
+        # minhash_lsh_pairs / lsh_verified_pairs, and on noisy entity
+        # pages by perfbench's kg_build workload.
         with loop_width(spark, _build_width(n)):
             _KG_CACHE[key] = run_kg_construction(
                 spark, sources, ENTITY_PROFILE, blocking="key"

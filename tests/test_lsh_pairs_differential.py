@@ -1,39 +1,79 @@
-"""Differential guard for the shuffle-free LSH candidate generation.
+"""Differential guard for the shared LSH blocking operator (lsh.lsh_pairs).
 
-q_minhash_lsh_pairs emits each pair exactly once at its FIRST shared band
-(an unrolled codegen filter) instead of band-join + .distinct(). The pair
-SET must be identical to the straightforward distinct formulation on any
-corpus — including adversarial shapes: exact duplicates (all bands
-collide), singletons, empty strings, and high-collision tiny vocabularies.
+lsh_pairs emits each pair exactly once at its FIRST shared band (an
+unrolled codegen filter) instead of band-join + .distinct(). The pair SET
+must be identical to the straightforward md5 band-hash join + distinct on
+any input — including adversarial shapes: exact duplicates (all bands
+collide), singletons, empty strings, high-collision tiny vocabularies —
+and for both of its callers: corpus dedup (q_minhash_lsh_pairs,
+q_lsh_verified_pairs) and KG blocking (block_candidates, salted or not).
 """
 
 from __future__ import annotations
 
 import random
 
+import pytest
 from pyspark.sql import functions as F
 
-from harvesting_validator_spark.queries.dedup import (
-    N_BANDS,
-    _band_table,
-    q_minhash_lsh_pairs,
-)
+from harvesting_validator_spark.lsh import N_BANDS, N_HASHES
+from harvesting_validator_spark.queries.common import tbl, tokens
+from harvesting_validator_spark.queries.dedup import q_minhash_lsh_pairs
 
 
-def _reference_pairs(spark, sf_dir):
+def _md5_bands(df, id_col, toks):
+    """Reference band table, written out independently of lsh.py: one row
+    per (id, band_id) with band_hash = md5(mh_2b || '_' || mh_2b+1), the
+    form the DuckDB oracle (_BAND_SQL) uses."""
+
+    def mh(s):
+        prefix = f"{s}:"
+        return F.array_min(
+            F.transform(
+                toks,
+                lambda t: F.conv(
+                    F.substring(F.md5(F.concat(F.lit(prefix), t)), 1, 8), 16, 10
+                ).cast("bigint"),
+            )
+        )
+
+    sig = [mh(s) for s in range(N_HASHES)]
+    rows_per_band = N_HASHES // N_BANDS
+    bands = F.array(
+        *[
+            F.struct(
+                F.lit(b).alias("band_id"),
+                F.md5(
+                    F.concat_ws("_", *sig[b * rows_per_band : (b + 1) * rows_per_band])
+                ).alias("band_hash"),
+            )
+            for b in range(N_BANDS)
+        ]
+    )
+    return df.select(id_col, F.explode(bands).alias("band")).select(
+        id_col, "band.band_id", "band.band_hash"
+    )
+
+
+def _band_join_distinct(bands, id_col, a_name, b_name):
     """The r2 formulation: band-hash self-join + distinct."""
-    b = _band_table(spark, sf_dir)
-    a, c = b.alias("a"), b.alias("b")
+    a, c = bands.alias("a"), bands.alias("b")
     return (
         a.join(
             c,
             (F.col("a.band_id") == F.col("b.band_id"))
             & (F.col("a.band_hash") == F.col("b.band_hash"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
+            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
         )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
+        .select(F.col(f"a.{id_col}").alias(a_name), F.col(f"b.{id_col}").alias(b_name))
         .distinct()
     )
+
+
+def _reference_pairs(spark, sf_dir):
+    d = tbl(spark, sf_dir, "documents")
+    bands = _md5_bands(d, "doc_id", F.array_distinct(tokens()))
+    return _band_join_distinct(bands, "doc_id", "doc_a", "doc_b")
 
 
 def _write_docs(spark, tmp_path, texts):
@@ -73,12 +113,48 @@ def test_first_band_no_pairs_on_disjoint_vocab(spark, tmp_path):
     assert q_minhash_lsh_pairs(spark, sf_dir).count() == 0
 
 
-# --- r6: class-level + bitmap verified pairs --------------------------------------
-def _reference_verified(spark, sf_dir):
-    """The r5 formulation: per-DOC-pair array_intersect on candidates."""
-    from harvesting_validator_spark.queries.common import dround, md5_int, tbl, tokens
+@pytest.mark.parametrize("n_salt", [1, 4])
+def test_kg_block_candidates_equal_band_join_distinct(spark, n_salt):
+    """KG blocking is lsh_pairs over mentions keyed by entity: its pair set
+    equals the md5 band join + distinct over the same attribute token
+    sets, salted or not, each pair once and with its own payload."""
+    from harvesting_validator_spark.kg.linking import (
+        block_candidates,
+        extract_mentions,
+    )
+    from harvesting_validator_spark.sources.rdf_parse import (
+        parse_sources_to_triples,
+    )
+    from harvesting_validator_spark.sources.synthetic import (
+        generate_noisy_entity_sources,
+    )
 
-    pairs = q_minhash_lsh_pairs(spark, sf_dir)
+    triples = parse_sources_to_triples(generate_noisy_entity_sources(spark, 120))
+    mentions = spark.createDataFrame(extract_mentions(triples).collect())
+    toks = F.array_distinct(F.split(F.col("attr_text"), " "))
+    ref = {
+        (r.entity_a, r.entity_b)
+        for r in _band_join_distinct(
+            _md5_bands(mentions, "entity", toks), "entity", "entity_a", "entity_b"
+        ).collect()
+    }
+    rows = block_candidates(mentions, n_salt=n_salt).collect()
+    got = [(r.entity_a, r.entity_b) for r in rows]
+    assert set(got) == ref
+    assert ref, "low-entropy mentions must collide"
+    assert len(got) == len(ref)
+    text = {r.entity: r.attr_text for r in mentions.collect()}
+    assert all(r.text_a == text[r.entity_a] and r.text_b == text[r.entity_b]
+               for r in rows)
+
+
+# --- class-level + bitmap verified pairs ------------------------------------------
+def _reference_verified(spark, sf_dir):
+    """The r5 formulation: per-DOC-pair array_intersect on the band-join +
+    distinct candidates."""
+    from harvesting_validator_spark.queries.common import dround, md5_int
+
+    pairs = _reference_pairs(spark, sf_dir)
     d = (
         tbl(spark, sf_dir, "documents")
         .select(
@@ -115,6 +191,23 @@ def _adversarial_texts(vocab_size: int, n_docs: int, seed: int):
     return texts
 
 
+def _hot_class_texts(vocab_size: int, seed: int):
+    """One duplicate class of 300 identical docs (44,850 intra-class pairs)
+    plus near-duplicates of it that differ by one token."""
+    texts = _adversarial_texts(vocab_size, n_docs=150, seed=seed)
+    hot = [f"w{i}" for i in range(9)]
+    texts += [" ".join(hot)] * 300
+    texts += [" ".join(hot[:k] + hot[k + 1:]) for k in range(5)]
+    texts += [" ".join(hot + [f"w{vocab_size - 1}"])] * 2
+    return texts
+
+
+def _is_bitmap_path(spark, sf_dir):
+    import harvesting_validator_spark.queries.dedup as dedup_mod
+
+    return dedup_mod._bitmap_vocab(dedup_mod._token_classes(spark, sf_dir)) is not None
+
+
 def test_class_bitmap_verified_equals_per_doc_reference(spark, tmp_path):
     """r6 rewrite guard: token-set classes + dictionary-bitmap intersects
     must reproduce the per-doc-pair array_intersect formulation exactly —
@@ -138,9 +231,23 @@ def test_class_fallback_verified_equals_per_doc_reference(spark, tmp_path):
     # force near-dup density despite the big vocab: clone a few docs
     texts += texts[:10]
     sf_dir = _write_docs(spark, tmp_path, texts)
-    vocab = dedup_mod._bitmap_vocab(dedup_mod._token_classes(spark, sf_dir))
-    assert vocab is None, "400-token vocab must reject the bitmap path"
+    assert not _is_bitmap_path(spark, sf_dir), "400-token vocab must reject the bitmap path"
     new = _verified_rows(dedup_mod.q_lsh_verified_pairs(spark, sf_dir))
     ref = _verified_rows(_reference_verified(spark, sf_dir))
     assert new == ref
     assert new
+
+
+@pytest.mark.parametrize("vocab_size,bitmap", [(12, True), (400, False)])
+def test_hot_duplicate_class_verified_equals_reference(spark, tmp_path, vocab_size, bitmap):
+    """A 300-doc duplicate class expands through the (class_id, doc_id)
+    membership join, on both verify paths, to exactly the reference's
+    doc pairs — each once."""
+    from harvesting_validator_spark.queries.dedup import q_lsh_verified_pairs
+
+    sf_dir = _write_docs(spark, tmp_path, _hot_class_texts(vocab_size, seed=17))
+    assert _is_bitmap_path(spark, sf_dir) == bitmap
+    new = _verified_rows(q_lsh_verified_pairs(spark, sf_dir))
+    ref = _verified_rows(_reference_verified(spark, sf_dir))
+    assert new == ref
+    assert len(new) > 300 * 299 // 2

@@ -7,6 +7,8 @@ Gold inputs mirror the reference's fixture grammar
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from harvesting_validator_spark.sources.rdf_parse import (
@@ -181,10 +183,16 @@ def test_malformed_raises():
         parse_turtle("<http://s> <http://p> .")
 
 
+REFERENCE_FIXTURE = (
+    "/root/reference/test/config/migrations/202103191602-create-dummy-import.ttl"
+)
+
+
+@pytest.mark.skipif(
+    not os.path.exists(REFERENCE_FIXTURE), reason="reference checkout not present"
+)
 def test_reference_fixture_roundtrip():
-    text = open(
-        "/root/reference/test/config/migrations/202103191602-create-dummy-import.ttl"
-    ).read()
+    text = open(REFERENCE_FIXTURE).read()
     ts = parse_turtle(text)
     assert len(ts) == 14
     subj_counts = {}

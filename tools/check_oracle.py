@@ -62,7 +62,10 @@ def main() -> int:
     import __spark_entry__ as entry_mod
     from harvesting_validator_spark.session import get_spark
 
-    spark = get_spark(shuffle_partitions=8)
+    spark = get_spark(
+        shuffle_partitions=8,
+        extra_conf={"spark.ui.showConsoleProgress": "false"},
+    )
     failures = []
     for sf_dir in sf_dirs:
         print(f"== {sf_dir} ==")

@@ -2,6 +2,9 @@
 
 Usage: python tools/query_bench.py <query> [reps] [sf_dir] [cpus]
 
+``cpus`` defaults to ``SPARK_GRAFT_CPUS``, else the cores this process
+may run on (``session._default_cores``).
+
 Each rep is a FRESH subprocess (new JVM, cold executor storage) so
 timings cannot be contaminated by another query's resident RDDs or by
 JIT state — the protocol VERDICT r3 asked for when attributing suite
@@ -16,6 +19,10 @@ import os
 import statistics
 import subprocess
 import sys
+
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from harvesting_validator_spark.session import _default_cores  # noqa: E402
 
 CHILD = r"""
 import json, os, sys, time
@@ -44,9 +51,7 @@ def main() -> None:
     sf_dir = sys.argv[3] if len(sys.argv) > 3 else os.environ.get(
         "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"
     )
-    cpus = sys.argv[4] if len(sys.argv) > 4 else os.environ.get(
-        "SPARK_GRAFT_CPUS", "32"
-    )
+    cpus = sys.argv[4] if len(sys.argv) > 4 else str(_default_cores())
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     code = CHILD.format(repo=repo, cpus=cpus, sf_dir=sf_dir, query=query)
     secs, rows = [], None
