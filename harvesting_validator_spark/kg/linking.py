@@ -6,14 +6,15 @@ Stages, all DataFrame-native:
 
 1. ``extract_mentions`` — pivot each typed subject's literal attributes
    into one row per (doc_id, entity IRI): the "mention".
-2. ``block_candidates`` — ``lsh.lsh_pairs`` over the mentions keyed by
-   entity: minhash of the attribute token set, banded; candidate pairs =
-   entities sharing a band, each emitted once at its first shared band.
-   The band join carries entity ids only and the mention payload attaches
-   after it; hot bands (stopword-heavy mentions) are split by AQE
-   skew-join handling, and the band key can be salted via ``n_salt``.
-   ``block_candidates_by_key`` (exact strong-key blocking) attaches the
-   payload the same way.
+2. ``block_candidates`` — ``lsh.lsh_pairs`` over one representative
+   mention per entity: minhash of the attribute token set, banded;
+   candidate pairs = entities sharing a band, each emitted once at its
+   first shared band, so the pair stream is never deduplicated. The
+   attribute bundles ride in the band rows; hot bands (stopword-heavy
+   mentions) are split by AQE skew-join handling, and the band key can be
+   salted via ``n_salt``. ``block_candidates_by_key`` (exact strong-key
+   blocking) pairs the same representatives on entity ids and attaches
+   their bundles to the deduplicated id pairs (``lsh.attach``).
 3. ``score_pairs`` — pure-Catalyst token-Jaccard + strong-key agreement
    (array_intersect/array_union/arrays_overlap inside whole-stage
    codegen; no Python anywhere in the hot path).
@@ -21,8 +22,9 @@ Stages, all DataFrame-native:
    union-find canonicalization (canonicalize.py).
 
 Scale notes: mentions are ~1 row per entity (orders of magnitude smaller
-than triples); signatures are columnar array ops (no shuffle); the pair
-scorer runs on candidates only — never on the quadratic all-pairs space.
+than triples), and the per-entity reduction is one mention-sized shuffle;
+signatures are columnar array ops (no shuffle); the pair scorer runs on
+candidates only — never on the quadratic all-pairs space.
 """
 
 from __future__ import annotations
@@ -77,9 +79,21 @@ def extract_mentions(
     )
 
 
+def _one_per_entity(mentions: DataFrame) -> DataFrame:
+    """One mention per entity, the unit both blockers pair. An IRI
+    mentioned in several documents (the same file at several commits) has
+    a mention row per document; its representative is the least
+    ``(attr_text, strong_keys)``, so blocking and scoring read the same
+    deterministic bundle."""
+    rep = F.min(F.struct("attr_text", "strong_keys")).alias("m")
+    return mentions.groupBy("entity").agg(rep).select(
+        "entity", "m.attr_text", "m.strong_keys"
+    )
+
+
 def _candidates(pairs: DataFrame) -> DataFrame:
-    """The candidate columns both blockers emit, read off mention rows
-    attached by entity (``lsh.attach``) as ``a`` and ``b``."""
+    """The candidate columns both blockers emit, read off representative
+    rows paired as ``a`` and ``b``."""
     return pairs.select(
         F.col("a.entity").alias("entity_a"),
         F.col("b.entity").alias("entity_b"),
@@ -95,7 +109,9 @@ def block_candidates(mentions: DataFrame, n_salt: int = 1) -> DataFrame:
     attribute token set (``lsh.lsh_pairs``, ``n_salt`` splits hot bands),
     each once, with both attribute bundles attached."""
     toks = F.array_distinct(F.split(F.col("attr_text"), " "))
-    rows = mentions.select("entity", "attr_text", "strong_keys", *minhash(toks))
+    rows = _one_per_entity(mentions).select(
+        "entity", "attr_text", "strong_keys", *minhash(toks)
+    )
     return _candidates(lsh_pairs(rows, "entity", n_salt=n_salt))
 
 
@@ -105,11 +121,12 @@ def block_candidates_by_key(mentions: DataFrame) -> DataFrame:
     for key-bearing entities — the standard first blocking pass in record
     linkage; minhash blocking (block_candidates) covers keyless mentions.
     The key join carries entity ids only; pairs sharing several keys are
-    deduplicated as id pairs before the mention payload attaches.
+    deduplicated as id pairs before the bundles attach.
     Shuffle is keyed by the strong key; a pathological hot key (one value
     shared by millions of entities) is the classic skew case — AQE
     skew-join splitting plus an upstream frequency cap handle it."""
-    keyed = mentions.select("entity", F.explode("strong_keys").alias("key"))
+    reps = _one_per_entity(mentions)
+    keyed = reps.select("entity", F.explode("strong_keys").alias("key"))
     a, b = keyed.alias("a"), keyed.alias("b")
     pairs = (
         a.join(
@@ -120,7 +137,7 @@ def block_candidates_by_key(mentions: DataFrame) -> DataFrame:
         .select(F.col("a.entity").alias("id_a"), F.col("b.entity").alias("id_b"))
         .dropDuplicates()
     )
-    return _candidates(attach(pairs, mentions, "entity"))
+    return _candidates(attach(pairs, reps, "entity"))
 
 
 def score_pairs(candidates: DataFrame) -> DataFrame:

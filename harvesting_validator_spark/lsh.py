@@ -4,11 +4,12 @@ corpus near-dedup (``queries/dedup.py``).
 - ``minhash(tokens)``: the ``N_HASHES`` signature columns ``mh0..``, with
   ``mh_s = min over t of md5int("s:" + t)``. DuckDB mirror:
   ``queries/dedup.py::_MH_SQL``.
-- ``band_rows(rows, id_col)``: one row per (id, band) holding the band's
+- ``band_rows(rows)``: one row per input row and band, adding the band's
   two raw minhash values ``(bh1, bh2)``. Equality on them is the same test
   as the oracle's ``md5(mh_2b || '_' || mh_2b+1)`` band hash (md5 does not
   collide on these inputs) on a narrower key.
-- ``lsh_pairs(rows, id_col)``: id pairs sharing at least one band.
+- ``lsh_pairs(rows, id_col)``: pairs of rows sharing at least one band,
+  each once; ``attach`` joins a wide payload onto selected id pairs.
 
 Columnar signatures cost no shuffle; the band self-join is the only one.
 """
@@ -42,9 +43,9 @@ def minhash(tokens) -> list:
     return [_mh(tokens, s) for s in range(N_HASHES)]
 
 
-def band_rows(rows: DataFrame, id_col: str) -> DataFrame:
-    """``(id_col, band_id, bh1, bh2)``, one row per id and band, from rows
-    holding the signature columns."""
+def band_rows(rows: DataFrame) -> DataFrame:
+    """Every column of ``rows`` (which hold the signature columns) plus
+    ``(band_id, bh1, bh2)``: one row per input row and band."""
     bands = F.array(
         *[
             F.struct(
@@ -55,8 +56,8 @@ def band_rows(rows: DataFrame, id_col: str) -> DataFrame:
             for b in range(N_BANDS)
         ]
     )
-    return rows.select(id_col, F.explode(bands).alias("band")).select(
-        id_col, "band.band_id", "band.bh1", "band.bh2"
+    return rows.select("*", F.explode(bands).alias("band")).select(
+        *rows.columns, "band.band_id", "band.bh1", "band.bh2"
     )
 
 
@@ -71,20 +72,20 @@ def attach(pairs: DataFrame, rows: DataFrame, id_col: str) -> DataFrame:
 def lsh_pairs(
     rows: DataFrame, id_col: str, *, n_salt: int = 1, self_pairs: bool = False
 ) -> DataFrame:
-    """Candidate pairs: ids of ``rows`` sharing at least one band.
+    """Candidate pairs: ids of ``rows`` sharing at least one band, each
+    once. ``rows`` holds ``id_col`` (one row per id), the signature
+    columns and any payload; the result is the band self-join, its two
+    sides aliased ``a`` and ``b``, so every column of ``rows`` reads as
+    ``a.<col>`` and ``b.<col>``. Keep the payload small (the band rows
+    carry it): callers with a wide payload pass ids and signatures only
+    and ``attach`` the rest to the selected ``(id_a, id_b)`` pairs.
 
-    ``rows`` holds ``id_col``, the signature columns and any payload. Ids
-    should be unique: a repeated id (an entity IRI mentioned in several
-    documents) yields a pair row per combination of its rows, some of
-    them more than once.
-
-    The band self-join carries only ``(id, band_id, bh1, bh2[, salt])``;
-    both sides' rows attach by id afterwards (``attach``). Each pair is
-    emitted once, at its first shared band: no earlier band has equal
-    hashes. That test is unrolled bigint comparisons inside whole-stage
-    codegen (a slice/zip_with/exists form is an interpreted higher-order
-    function per joined row, measured 16x slower), so the pair stream
-    needs no distinct and no shuffle.
+    Each pair is emitted once, at its first shared band: no earlier band
+    has equal hashes. The band rows carry the signature, so that test runs
+    in the join's own stage as unrolled bigint comparisons inside
+    whole-stage codegen (a slice/zip_with/exists form is an interpreted
+    higher-order function per joined row, measured 16x slower). The pair
+    stream needs no distinct and no shuffle.
 
     ``n_salt > 1`` splits hot bands: each left row goes to one salt
     bucket, each right row to all of them, so a band with B members costs
@@ -92,7 +93,7 @@ def lsh_pairs(
 
     Pairs have ``id_a < id_b``; ``self_pairs`` makes it ``<=``, so each id
     also pairs with itself (band 0 is its first shared band)."""
-    e = band_rows(rows, id_col)
+    e = band_rows(rows)
     key = ["band_id", "bh1", "bh2"]
     left = right = e
     if n_salt > 1:
@@ -105,14 +106,11 @@ def lsh_pairs(
     cond = (ida <= idb) if self_pairs else (ida < idb)
     for k in key:
         cond = cond & (F.col(f"a.{k}") == F.col(f"b.{k}"))
-    raw = left.alias("a").join(right.alias("b"), cond).select(
-        ida.alias("id_a"), idb.alias("id_b"), F.col("a.band_id").alias("band_id")
-    )
     earlier = F.lit(False)
     for bp in range(N_BANDS - 1):
         earlier = earlier | (
-            (F.col("band_id") > bp)
+            (F.col("a.band_id") > bp)
             & (F.col(f"a.mh{2 * bp}") == F.col(f"b.mh{2 * bp}"))
             & (F.col(f"a.mh{2 * bp + 1}") == F.col(f"b.mh{2 * bp + 1}"))
         )
-    return attach(raw, rows, id_col).filter(~earlier)
+    return left.alias("a").join(right.alias("b"), cond).filter(~earlier)

@@ -122,9 +122,10 @@ def run_kg_construction(
     deduplicated (subj, pred, obj) canonical graph.
 
     blocking: 'minhash' (``lsh.lsh_pairs`` over the attribute token set:
-    an entity-id band join, each pair emitted once, ``n_salt`` splitting
-    hot bands) or 'key' (exact blocking on strong identifying keys; n_salt
-    unused). Both attach the mention payload by entity after their join.
+    a band join, each pair emitted once, ``n_salt`` splitting hot bands)
+    or 'key' (exact blocking on strong identifying keys; n_salt unused).
+    Both pair one representative mention per entity, so an entity
+    mentioned in several documents yields each candidate pair once.
     Choose 'key' when strong keys exist — minhash banding over LOW-ENTROPY
     attribute text (short bundles sharing most tokens across distinct
     entities) degenerates toward quadratic candidates; shingling longer

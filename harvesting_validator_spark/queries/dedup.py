@@ -25,11 +25,18 @@ from pyspark.sql import functions as F
 from harvesting_validator_spark.lsh import (
     N_BANDS,
     N_HASHES,
+    attach,
     band_rows,
     lsh_pairs,
     minhash,
 )
-from harvesting_validator_spark.queries.common import dround, md5_int, tbl, tokens
+from harvesting_validator_spark.queries.common import (
+    dround,
+    md5_int,
+    spread_scan,
+    tbl,
+    tokens,
+)
 
 
 # --- exact dedup: hash-groupBy ---------------------------------------------------
@@ -87,8 +94,6 @@ def q_minhash_lsh_pairs(spark, sf_dir):
     quadratic pair stream — the single most expensive shuffle in the
     bench suite. lsh_pairs emits a pair only at its first shared band, a
     map-side filter: identical pair set, zero pair-stream shuffle."""
-    from harvesting_validator_spark.queries.common import spread_scan
-
     # parallelism guard: with no pair-dedup shuffle, the whole pipeline
     # fuses into the stage that SCANS the documents parquet — one small
     # file at bench sf = 1-4 splits, so the quadratic pair work ran
@@ -97,7 +102,7 @@ def q_minhash_lsh_pairs(spark, sf_dir):
     # the scan already has enough splits and spread_scan no-ops
     sig = spread_scan(spark, sf_dir, "documents", q_minhash_signatures(spark, sf_dir))
     return lsh_pairs(sig, "doc_id").select(
-        F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b")
+        F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
     )
 
 
@@ -205,22 +210,18 @@ WHERE round(CAST(len(list_intersect(a.toks, b.toks)) AS DOUBLE)
 # bitmap fast path covers corpora whose distinct token-hash vocabulary fits
 # 4 x 64-bit words; larger vocabularies fall back to array_intersect
 _LSH_VOCAB_WORDS_MAX = 4
-# r6: the class table is persisted per invocation (it feeds 7 plan branches);
-# the previous invocation's cache is released here so repeated calls in one
-# session hold at most one resident copy (bench.py additionally sweeps via
+# r6: the class table and the membership table are persisted per
+# invocation (they feed several plan branches); the previous invocation's
+# caches are released here so repeated calls in one session hold at most
+# one resident copy of each (bench.py additionally sweeps via
 # release_new_rdds between queries).
 _LSH_CLS_CACHE: list = []
+_LSH_MEM_CACHE: list = []
 
 
 def _doc_token_sets(spark, sf_dir):
     d = tbl(spark, sf_dir, "documents")
     return d.select("doc_id", F.array_sort(F.array_distinct(tokens())).alias("ts"))
-
-
-def _class_ids(docs):
-    # one row per token set; class_id = its min doc_id. A groupBy keeps
-    # map-side partial aggregation, so a hot class costs no task its size
-    return docs.groupBy("ts").agg(F.min("doc_id").alias("class_id"))
 
 
 def _token_classes(spark, sf_dir):
@@ -232,23 +233,28 @@ def _token_classes(spark, sf_dir):
     so blocking + verification is a function of the class pair, not the
     doc pair. On the bench corpus this cuts raw band collisions 3x
     (2.33G -> 0.78G at sf1.0) and Jaccard evaluations ~2.2x, and lets the
-    >=0.7 filter run BEFORE the doc-pair expansion. Members are not
-    collected: ``_class_members`` joins them back."""
-    cls = _class_ids(_doc_token_sets(spark, sf_dir))
+    >=0.7 filter run BEFORE the doc-pair expansion. One row per token set
+    ``ts``, named by its min doc_id; a groupBy keeps map-side partial
+    aggregation, so a hot class costs no task its size. Members are not
+    collected: ``_class_members`` joins docs back by ``ts``."""
+    cls = _doc_token_sets(spark, sf_dir).groupBy("ts").agg(
+        F.min("doc_id").alias("class_id")
+    )
     ti = F.array_distinct(F.transform(F.col("ts"), md5_int))
     return cls.select(
-        "class_id", ti.alias("ti"), *minhash(F.col("ts"))
+        "class_id", "ts", ti.alias("ti"), *minhash(F.col("ts"))
     ).withColumn("n_toks", F.size("ti"))
 
 
-def _class_members(spark, sf_dir):
+def _class_members(spark, sf_dir, cls):
     """The ``(class_id, doc_id)`` membership table: each doc joined to its
-    class by token set — one row per doc, no per-class array. Built from
-    the scan, not from the persisted class table: AQE reuses no exchange
-    above a cached-table stage, so a cached leaf here would build this
-    table once per expansion join instead of once."""
-    docs = _doc_token_sets(spark, sf_dir)
-    return docs.join(_class_ids(docs), "ts").select("class_id", "doc_id")
+    row of the class table ``cls`` by token set — one row per doc, no
+    per-class array, and no second grouping of the corpus."""
+    return (
+        _doc_token_sets(spark, sf_dir)
+        .join(cls.select("ts", "class_id"), "ts")
+        .select("class_id", "doc_id")
+    )
 
 
 def _bitmap_vocab(cls, n_classes: int | None = None):
@@ -318,17 +324,18 @@ def q_lsh_verified_pairs(spark, sf_dir):
        collisions behave identically to the oracle's int-set semantics.
        Larger vocabularies keep the array_intersect fallback on the
        class-level plan (still ~3x fewer intersects than r5).
-    3. Blocking is ``lsh.lsh_pairs`` over the class table: the band
-       self-join carries only (class_id, band_id, bh1, bh2) — slim enough
-       that statistics/AQE keep it broadcast at bench sf (never forced:
-       at 10^12-doc scale it degrades to a shuffled join, guarded by
-       tests/test_plans.py) — and class metadata attaches by class_id
-       AFTER the join. ``self_pairs`` (`<=` on class_id) emits the
-       diagonal (intra-class) pairs through the same pipeline — band 0
-       survives the first-shared-band filter, Jaccard reduces to n/n =
-       1.0 — avoiding a Union branch (a union above this pipeline
-       measured 7x slower than the fused single pipeline: the count no
-       longer fuses into the probe stage).
+    3. Blocking is ``lsh.lsh_pairs`` over the class signatures: the band
+       self-join carries (class_id, band_id, bh1, bh2) plus the earlier
+       bands' signature values, so each class pair leaves the join once,
+       at its first shared band — small enough that statistics/AQE keep
+       it broadcast at bench sf (never forced: at 10^12-doc scale it
+       degrades to a shuffled join, guarded by tests/test_plans.py).
+       Class metadata attaches by class_id to the emitted pairs only.
+       ``self_pairs`` (`<=` on class_id) emits the diagonal (intra-class)
+       pairs through the same pipeline — band 0 is their first shared
+       band, Jaccard reduces to n/n = 1.0 — avoiding a Union branch (a
+       union above this pipeline measured 7x slower than the fused
+       single pipeline: the count no longer fuses into the probe stage).
     4. The >=0.7 filter runs on class pairs BEFORE expansion; only
        passing pairs expand to doc pairs, by joining the (class_id,
        doc_id) membership table (_class_members) once per side. No
@@ -338,14 +345,19 @@ def q_lsh_verified_pairs(spark, sf_dir):
        vanish there.
 
     The class table is persisted (it feeds 7 plan branches; InMemory
-    stats also give AQE true sizes for the broadcast decisions); the
-    previous invocation's cache is released via _LSH_CLS_CACHE."""
+    stats also give AQE true sizes for the broadcast decisions), and the
+    membership table, joined to it by token set, is persisted next to it:
+    the corpus is grouped by token set once. The previous invocation's
+    caches are released via _LSH_CLS_CACHE / _LSH_MEM_CACHE."""
     from harvesting_validator_spark.runtime import swap_persisted
 
     cls = swap_persisted(_LSH_CLS_CACHE, _token_classes(spark, sf_dir))
     # full-width materialization before any column-pruned reader (house
     # invariant: first-scan column pruning breaks later full-width reads)
     n_classes = cls.count()
+    # persisted too: the two expansion joins below would each rebuild it,
+    # since AQE reuses no exchange above a cached-table stage
+    mem = swap_persisted(_LSH_MEM_CACHE, _class_members(spark, sf_dir, cls))
     vocab = _bitmap_vocab(cls, n_classes)
     if vocab is not None:
         words = _bitmap_words(vocab)
@@ -367,10 +379,12 @@ def q_lsh_verified_pairs(spark, sf_dir):
         n_words = 0
         verify_cols = ["ti"]
 
-    rows = cls.select(
-        "class_id", "n_toks", *verify_cols, *[f"mh{i}" for i in range(N_HASHES)]
+    sig = cls.select("class_id", *[f"mh{i}" for i in range(N_HASHES)])
+    meta = cls.select("class_id", "n_toks", *verify_cols)
+    pairs = lsh_pairs(sig, "class_id", self_pairs=True).select(
+        F.col("a.class_id").alias("id_a"), F.col("b.class_id").alias("id_b")
     )
-    j = lsh_pairs(rows, "class_id", self_pairs=True)
+    j = attach(pairs, meta, "class_id")
     if n_words:
         inter = sum(
             (
@@ -407,7 +421,6 @@ def q_lsh_verified_pairs(spark, sf_dir):
         F.col("id_a").alias("ca"), F.col("id_b").alias("cb"), jac.alias("jaccard")
     ).filter(F.col("jaccard") >= 0.7)
 
-    mem = _class_members(spark, sf_dir)
     da, db = F.col("xa.doc_id"), F.col("xb.doc_id")
     return (
         cp.join(mem.alias("xa"), F.col("ca") == F.col("xa.class_id"))
@@ -562,15 +575,15 @@ QUALIFY row_number() OVER (PARTITION BY bucket ORDER BY cos DESC, vec_a, vec_b) 
 # --- incremental dedup: new batch vs an existing LSH index --------------------
 def q_dedup_incremental_novel(spark, sf_dir):
     """Dedup a NEW crawl batch against the EXISTING corpus index without
-    ever forming doc-doc pairs: the index is the distinct (band_id,
-    bh1, bh2) set (``lsh.band_rows``) of already-ingested docs (here: doc_id % 10 != 0
-    stands in for the corpus, % 10 == 0 for the new batch); each batch
+    ever forming doc-doc pairs: the index is the distinct (band_id, bh1,
+    bh2) set (``lsh.band_rows``) of already-ingested docs (here: doc_id %
+    10 != 0 stands in for the corpus, % 10 == 0 for the new batch); each batch
     doc probes its own bands with a left join and is novel iff NO band
     hits. This is the steady-state shape of corpus-scale dedup — the
     index is an append-only band table, the per-batch cost is
     |batch| × bands probes (one keyed equi-join), never the quadratic
     candidate stream a full self-join re-pays every ingest."""
-    bands = band_rows(q_minhash_signatures(spark, sf_dir), "doc_id")
+    bands = band_rows(q_minhash_signatures(spark, sf_dir))
     key = ["band_id", "bh1", "bh2"]
     idx = (
         bands.filter(F.col("doc_id") % 10 != 0)

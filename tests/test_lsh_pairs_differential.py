@@ -6,7 +6,8 @@ must be identical to the straightforward md5 band-hash join + distinct on
 any input — including adversarial shapes: exact duplicates (all bands
 collide), singletons, empty strings, high-collision tiny vocabularies —
 and for both of its callers: corpus dedup (q_minhash_lsh_pairs,
-q_lsh_verified_pairs) and KG blocking (block_candidates, salted or not).
+q_lsh_verified_pairs) and KG blocking (block_candidates, salted or not,
+and block_candidates_by_key when an entity has several mention rows).
 """
 
 from __future__ import annotations
@@ -146,6 +147,79 @@ def test_kg_block_candidates_equal_band_join_distinct(spark, n_salt):
     text = {r.entity: r.attr_text for r in mentions.collect()}
     assert all(r.text_a == text[r.entity_a] and r.text_b == text[r.entity_b]
                for r in rows)
+
+
+@pytest.mark.parametrize("blocker", ["minhash", "minhash_salted", "key"])
+def test_kg_blockers_pair_entities_once_across_documents(spark, blocker):
+    """An entity IRI mentioned in several documents (the same page at
+    several commits) has a mention row per document. Both blockers pair
+    entities, not mentions: each entity pair once, both sides carrying
+    the entity's representative bundle (its least (attr_text,
+    strong_keys)), and the pair set is that of the representatives."""
+    from harvesting_validator_spark.kg.linking import (
+        block_candidates,
+        block_candidates_by_key,
+        extract_mentions,
+    )
+    from harvesting_validator_spark.sources.rdf_parse import (
+        parse_sources_to_triples,
+    )
+    from harvesting_validator_spark.sources.synthetic import (
+        generate_noisy_entity_sources,
+    )
+
+    triples = parse_sources_to_triples(generate_noisy_entity_sources(spark, 60))
+    base = extract_mentions(triples)
+    rows = [tuple(r) for r in base.collect()]
+    extra = []
+    for k, (doc, ent, typ, text, keys) in enumerate(rows[:30]):
+        # the same page at a later commit, unchanged
+        extra.append((f"{doc}-c1", ent, typ, text, keys))
+        if k % 3 == 1:  # a changed page whose bundle sorts after the first
+            extra.append((f"{doc}-c2", ent, typ, text + " renamed", keys))
+        if k % 3 == 2:  # a changed page whose bundle sorts first
+            extra.append((f"{doc}-c3", ent, typ, "alias " + text, ["999-99-9999"]))
+    mentions = spark.createDataFrame(
+        [(str(r[0]),) + r[1:] for r in rows + extra],
+        "doc_id string, entity string, entity_type string, attr_text string, "
+        "strong_keys array<string>",
+    )
+    reps: dict = {}
+    for _, ent, _, text, keys in rows + extra:
+        rep = (text, list(keys))
+        if ent not in reps or rep < reps[ent]:
+            reps[ent] = rep
+
+    if blocker == "key":
+        got_df = block_candidates_by_key(mentions)
+        ref = {
+            (a, b)
+            for a in reps
+            for b in reps
+            if a < b and set(reps[a][1]) & set(reps[b][1])
+        }
+    else:
+        got_df = block_candidates(mentions, n_salt=4 if blocker == "minhash_salted" else 1)
+        rep_df = spark.createDataFrame(
+            [(e, t) for e, (t, _) in reps.items()], "entity string, attr_text string"
+        )
+        toks = F.array_distinct(F.split(F.col("attr_text"), " "))
+        ref = {
+            (r.entity_a, r.entity_b)
+            for r in _band_join_distinct(
+                _md5_bands(rep_df, "entity", toks), "entity", "entity_a", "entity_b"
+            ).collect()
+        }
+    got = got_df.collect()
+    pairs = [(r.entity_a, r.entity_b) for r in got]
+    assert ref, "duplicated mentions must still collide"
+    assert len(pairs) == len(set(pairs)), "an entity pair appeared more than once"
+    assert set(pairs) == ref
+    assert all(
+        (r.text_a, list(r.keys_a)) == reps[r.entity_a]
+        and (r.text_b, list(r.keys_b)) == reps[r.entity_b]
+        for r in got
+    )
 
 
 # --- class-level + bitmap verified pairs ------------------------------------------

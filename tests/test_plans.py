@@ -128,9 +128,11 @@ def test_lsh_candidates_have_no_pair_stream_aggregation(spark, sf_dir):
 
 def test_kg_lsh_candidates_have_no_pair_stream_aggregation(spark):
     """KG minhash blocking shares lsh.lsh_pairs' first-shared-band
-    emission: over a plain mentions table, the plan (salted or not) has
-    no aggregation at all — the old dropDuplicates on the pair stream is
-    gone."""
+    emission: over a plain mentions table, the plan (salted or not)
+    aggregates only mentions, one representative per entity, below the
+    band join — the old dropDuplicates on the pair stream is gone."""
+    import re
+
     from harvesting_validator_spark.kg.linking import block_candidates
 
     mentions = spark.createDataFrame(
@@ -141,7 +143,9 @@ def test_kg_lsh_candidates_have_no_pair_stream_aggregation(spark):
     )
     for n_salt in (1, 4):
         plan = _plan(block_candidates(mentions, n_salt=n_salt))
-        assert "HashAggregate" not in plan and "SortAggregate" not in plan
+        keys = re.findall(r"Aggregate\(keys?=\[([^\]]*)\]", plan)
+        assert keys, "the per-entity representative is an aggregation"
+        assert all(re.fullmatch(r"entity#\d+", k) for k in keys), keys
         assert "CartesianProduct" not in plan
 
 
