@@ -35,10 +35,9 @@ def q_sessionize_events(spark, sf_dir):
     lag() over (user_id, ts, event_id) marks session starts; a running
     sum of the marks numbers sessions 1..n per user. The (ts, event_id)
     ordering is total, so session assignment is deterministic even under
-    timestamp ties. A gap of EXACTLY the threshold starts a new session
-    (>=), matching the semantics of Spark's session_window — windows
-    [t, t+gap) merge only on overlap — so this operator and its
-    streaming twin (streaming/sessions.py) agree on every stream.
+    timestamp ties. A gap of EXACTLY the threshold starts a new session:
+    the boundary test is ``t_us - prev >= SESSION_GAP_US``, the same
+    ``>=`` that ``O_SESSIONS`` uses.
     Exactly one shuffle (user_id); the rollup reuses the same
     partitioning (session key is user_id-prefixed).
     """

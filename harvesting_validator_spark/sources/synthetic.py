@@ -380,13 +380,6 @@ def generate_chain_sources(
     )
 
 
-def expected_verdict_counts(n_docs: int) -> dict[str, int]:
-    """Closed-form truth for generate_sources: docs with i%10 in {7,8,9}
-    are non-conforming."""
-    bad = sum(1 for i in range(n_docs) if i % 10 in (7, 8, 9))
-    return {"non_conforming": bad, "conforming": n_docs - bad}
-
-
 # profile exercising the SHACL-core EXTENSION components (value ranges,
 # languageIn, uniqueLang, property pairs) — beyond what the reference's
 # two profiles use, but compiled by the same engine (shacl/compile.py)

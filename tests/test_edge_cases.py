@@ -1,13 +1,23 @@
-"""Validator boundary conditions: empty inputs, untargeted-only docs,
-profiles with no constraints."""
+"""Validator and KG-pipeline boundary conditions: empty and singleton
+inputs, untargeted-only docs, profiles with no constraints."""
 
 from __future__ import annotations
 
+import pytest
+
 from harvesting_validator_spark.operators.filtering import split_valid_error
-from harvesting_validator_spark.plans.pipeline import run_validation
+from harvesting_validator_spark.plans.pipeline import (
+    run_kg_construction,
+    run_validation,
+)
+from harvesting_validator_spark.runtime import persistent_rdd_ids
 from harvesting_validator_spark.shacl.compile import compute_focus, validate
 from harvesting_validator_spark.shacl.parse import parse_shapes_turtle
-from harvesting_validator_spark.sources.synthetic import APPLICATION_PROFILE
+from harvesting_validator_spark.sources.synthetic import (
+    APPLICATION_PROFILE,
+    ENTITY_PROFILE,
+    generate_entity_sources,
+)
 
 TRIPLE_SCHEMA = (
     "doc_id string, subj string, pred string, obj_value string, "
@@ -64,3 +74,25 @@ def test_empty_sources(spark):
     assert run.verdicts.count() == 0
     assert run.valid_triples.count() == 0
     assert run.report.count() == 0
+
+
+@pytest.mark.parametrize("blocking", ["minhash", "key"])
+@pytest.mark.parametrize("n_docs", [0, 1])
+def test_kg_construction_empty_and_singleton_corpus(spark, n_docs, blocking):
+    """Fewer than two documents leave nothing to link: an empty corpus
+    yields empty stages, a one-document corpus one mention that maps to
+    itself and its three canonical triples (rdf:type, name, ssn).
+    cleanup() releases every cache and checkpoint the run made."""
+    sources = generate_entity_sources(spark, 10, n_entities=1).limit(n_docs)
+    base = persistent_rdd_ids(spark)
+    run = run_kg_construction(spark, sources, ENTITY_PROFILE, blocking=blocking)
+    try:
+        assert run.edges.count() == 0
+        assert run.mentions.count() == n_docs
+        mapping = run.mapping.collect()
+        assert len(mapping) == n_docs
+        assert all(r.entity == r.canonical for r in mapping)
+        assert run.graph.count() == 3 * n_docs
+    finally:
+        run.cleanup()
+    assert persistent_rdd_ids(spark) == base

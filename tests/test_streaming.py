@@ -44,62 +44,3 @@ def test_streaming_validation_end_to_end(spark, tmp_path):
         tuple(r) for r in batch.verdicts.collect()
     }
     corpus.unpersist()
-
-
-def test_stateful_first_seen_dedup_across_batches_and_restart(spark, tmp_path):
-    """applyInPandasWithState operator: a content hash emits exactly one
-    keeper row across micro-batches AND across a stream restart (state
-    recovers from the checkpoint); duplicates arriving later emit nothing."""
-    import os
-
-    from harvesting_validator_spark.streaming.micro_batch import SOURCE_SCHEMA
-    from harvesting_validator_spark.streaming.stateful import (
-        docs_with_content_hash,
-        stream_dedup_first_seen,
-    )
-
-    landing = str(tmp_path / "landing")
-    ckpt = str(tmp_path / "ckpt")
-    out = str(tmp_path / "out")
-    corpus = generate_sources(spark, 30).persist()
-    corpus.count()
-
-    def run_available():
-        stream = spark.readStream.schema(SOURCE_SCHEMA).parquet(landing)
-        deduped = stream_dedup_first_seen(docs_with_content_hash(stream))
-        q = (
-            deduped.writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        assert q.awaitTermination(180), "stream run did not finish in time"
-
-    # batch 1: docs 0..19 land
-    corpus.filter(F.col("path").rlike("page[0-1]?[0-9]\\.")).write.mode(
-        "append"
-    ).parquet(landing)
-    run_available()
-    first = spark.read.parquet(out)
-    n_first = first.count()
-    assert n_first == first.select("content_hash").distinct().count() == 20
-
-    # batch 2 (NEW stream run, state restored from checkpoint): the full
-    # corpus lands again — 20 duplicates + 10 new docs
-    corpus.write.mode("append").parquet(landing)
-    run_available()
-    final = spark.read.parquet(out)
-    assert final.count() == 30  # only the 10 unseen hashes emitted
-    assert final.select("content_hash").distinct().count() == 30
-    # keepers are the deterministic batch-pipeline doc ids
-    expected = {
-        r.doc_id
-        for r in docs_with_content_hash(
-            spark.createDataFrame(corpus.collect(), corpus.schema)
-        ).collect()
-    }
-    assert {r.keep_doc for r in final.collect()} <= expected
-    corpus.unpersist()
-    assert os.path.isdir(ckpt)

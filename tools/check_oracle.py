@@ -70,8 +70,35 @@ def main() -> int:
     for sf_dir in sf_dirs:
         print(f"== {sf_dir} ==")
         failures += check_sf(spark, entry_mod, sf_dir, only, driver_fetch)
+        if not _session_alive(spark):
+            break
     print(f"\n{len(failures)} failures" + (f": {failures}" if failures else ""))
     return 1 if failures else 0
+
+
+class SessionDied(RuntimeError):
+    pass
+
+
+def _session_alive(spark) -> bool:
+    """One py4j round-trip: False if the JVM context is stopped or the
+    gateway no longer answers."""
+    try:
+        return not spark.sparkContext._jsc.sc().isStopped()
+    except Exception:
+        return False
+
+
+def _collect(spark, sdf) -> list[tuple]:
+    """``sdf.collect()`` that fails closed: a session that dies mid-collect
+    can hand back a truncated row list without raising (seen: 4.9M of
+    10.6M rows), which would pass for a hash mismatch."""
+    rows = [tuple(r) for r in sdf.collect()]
+    if not _session_alive(spark):
+        raise SessionDied(
+            f"spark session died during collect ({len(rows)} rows received)"
+        )
+    return rows
 
 
 def check_sf(
@@ -93,7 +120,12 @@ def check_sf(
         try:
             sdf = fn(spark, sf_dir)
             scols = sorted(sdf.columns)
-            srows = [tuple(r) for r in sdf.collect()]
+            srows = _collect(spark, sdf)
+        except SessionDied as exc:
+            # every later query would fail against the dead gateway
+            print(f"FAIL  {name}: {exc}")
+            failures.append(name)
+            break
         except Exception as exc:
             print(f"FAIL  {name}: spark error: {exc}")
             failures.append(name)
